@@ -60,8 +60,9 @@ final class GatewayClient(
   }
   private var conn: Conn = null
 
-  private def jstr(s: String): String =
-    "\"" + s.replace("\\", "\\\\").replace("\"", "\\\"") + "\""
+  // Escapes control characters too: a raw newline in multi-line SQL would
+  // end the request line early and desynchronise the connection.
+  import GatewayServer.jstr
 
   private def connect(): Conn = {
     val c = new Conn(new Socket(host, port()))

@@ -62,10 +62,16 @@ final case class GatewayAuth(user: String = "admin", password: String = "admin12
   *   {"op": "fetch_arrow", "job_id": "...", "partition": P[, "offset": K,
   *    "ctoken": "T"]}
   *       -> {"ok": true, "format": "arrow_ipc_stream", "token": "T"}\n,
-  *       then one raw LZ4-compressed Arrow IPC stream (schema + one record
-  *       batch per fetch page + EOS, self-delimiting), then
-  *       {"ok": true, "rows": N} — the reference's result wire (LZ4 Arrow
-  *       FlightData, `networks/tonic/src/server.rs:109-141`)
+  *       then one raw Arrow IPC stream (schema + one record batch per
+  *       ≤arrowBatchRows rows + EOS, self-delimiting) with LZ4_FRAME body
+  *       compression: each buffer one lz4-java frame of independent 64 KB
+  *       blocks, decodable by any LZ4_FRAME Arrow reader (commons-compress
+  *       included), then {"ok": true, "rows": N} — the reference's result
+  *       wire (LZ4 Arrow FlightData, `networks/tonic/src/server.rs:109-141`).
+  *       A failure after the ack line (encode error, mid-stream partition
+  *       recompute) closes the connection instead of answering: the client
+  *       is reading raw Arrow bytes, sees a truncated stream, and takes its
+  *       transport retry path
   *   {"op": "running_jobs"} / {"op": "cluster_nodes"} /
   *   {"op": "store_occupancy"}
   *       -> one {"row": [...]} per row, then {"ok": true, "rows": N}
@@ -104,16 +110,7 @@ final class GatewayServer(runtime: JobRuntime, port: Int = 0,
   acceptor.start()
 
   // --- tiny JSON helpers (no deps; values are strings/numbers/objects) ---
-  private def jstr(s: String): String =
-    "\"" + s.flatMap {
-      case '"' => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
+  import GatewayServer.jstr
 
   private def jval(v: Any): String = v match {
     case null => "null"
@@ -256,6 +253,7 @@ final class GatewayServer(runtime: JobRuntime, port: Int = 0,
             case _ => dispatch(msg, out, raw)
           }
         } catch {
+          case e: StreamAbortedException => throw e
           case NonFatal(e) =>
             out.println(s"""{"ok": false, "error": ${jstr(
               Option(e.getMessage).getOrElse(e.getClass.getName))}}""")
@@ -290,8 +288,9 @@ final class GatewayServer(runtime: JobRuntime, port: Int = 0,
   /** Drop handles whose grace deadline passed — piggybacked on every
     * dispatch (a live gateway drains the queue with its own traffic) AND
     * run by [[graceSweeper]] so a gateway that goes QUIET still frees
-    * what a condemned handle pins (the JobState + plan graph; the pages
-    * RDD was already unpersisted at runtime cleanup). */
+    * what a condemned handle pins (the JobState and its analyzed plan;
+    * the executed plan and pages were already released at runtime
+    * cleanup). */
   private def sweepHandles(): Unit = {
     val now = System.currentTimeMillis()
     val it = condemnedHandles.entrySet().iterator()
@@ -428,10 +427,13 @@ final class GatewayServer(runtime: JobRuntime, port: Int = 0,
         // protocol. Failing here answers with a clean JSON error and the
         // client can fall back to text fetch.
         ArrowCodec.toArrowSchema(h.schema)
-        // Binary result wire: ack line, then a self-delimiting LZ4 Arrow
-        // IPC stream fed page-by-page from the bounded fetch — at no point
-        // does the server hold more than one page + one encoded batch.
+        // Binary result wire: ack line, then a self-delimiting Arrow IPC
+        // stream fed page-by-page from the bounded fetch, every buffer an
+        // lz4-java frame of independent 64 KB blocks (Lz4FrameCodec) — at
+        // no point does the server hold more than one page + one encoded
+        // batch.
         val stream = h.fetchStream(Ticket(jobId, p))
+        var acked = false
         val n =
           try {
             // Force the first page job before the ack: stamps the token the
@@ -453,18 +455,27 @@ final class GatewayServer(runtime: JobRuntime, port: Int = 0,
             out.println(s"""{"ok": true, "format": "arrow_ipc_stream", """ +
               s""""token": ${jstr(tok.toString)}}""")
             out.flush()
+            acked = true
             val written = ArrowCodec.write(h.schema, stream, raw, arrowBatchRows)
             raw.flush()
             written
           } catch {
-            case e: FetchOffsetException => throw e
-            // Recoverable by contract: ticket stays re-fetchable, handle
-            // survives for the client's fallback (ADVICE r15).
-            case e: PartitionRecomputeException => throw e
-            // Raw-stream writes DO throw on a dead socket: transport loss,
-            // ticket stays fetchable (same rule as the text path above).
-            case e: java.io.IOException => throw e
-            case e: Throwable => handles.remove(jobId); throw e
+            case e: Throwable =>
+              // The handle survives for the client's fallback after a
+              // rejected offset, a partition recompute (recoverable by
+              // contract, ADVICE r15) or a dead socket (raw-stream writes
+              // DO throw on one: transport loss, same rule as the text
+              // path); any other failure evicts it.
+              e match {
+                case _: FetchOffsetException | _: PartitionRecomputeException |
+                    _: java.io.IOException => ()
+                case _ => handles.remove(jobId)
+              }
+              // Past the ack the client is decoding raw Arrow bytes: a JSON
+              // error line there reads as a huge message length and stalls
+              // it. Drop the connection instead — the truncated stream
+              // sends the client down its transport retry path.
+              throw (if (acked) new StreamAbortedException(e) else e)
           }
           finally stream.close()
         h.status match {
@@ -503,3 +514,24 @@ final class GatewayServer(runtime: JobRuntime, port: Int = 0,
     pool.shutdownNow()
   }
 }
+
+object GatewayServer {
+  /** JSON string literal: quotes, backslashes and every control character
+    * escaped, so a value never breaks the one-object-per-line framing.
+    * Shared by the server, [[GatewayClient]] and the running_jobs JSON. */
+  private[gateway] def jstr(s: String): String =
+    "\"" + s.flatMap {
+      case '"' => "\\\""
+      case '\\' => "\\\\"
+      case '\n' => "\\n"
+      case '\r' => "\\r"
+      case '\t' => "\\t"
+      case c if c < ' ' => f"\\u${c.toInt}%04x"
+      case c => c.toString
+    } + "\""
+}
+
+/** A fetch_arrow failure after the ack line: the connection handler closes
+  * the socket rather than answer, since the client is mid-Arrow-stream. */
+private final class StreamAbortedException(cause: Throwable)
+  extends RuntimeException(cause)

@@ -7,6 +7,7 @@ import scala.concurrent.duration._
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerStageCompleted, JobSucceeded}
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.types._
 import org.apache.spark.storage.StorageLevel
@@ -48,8 +49,11 @@ private[gateway] final class JobState(
     val jobId: String,
     val createdAtMs: Long,
     val meta: Map[String, String],
-    val df: DataFrame,
+    submitted: DataFrame,
     val pageSize: Int) {
+  @volatile private var dfV: DataFrame = submitted
+  /** The job's DataFrame: the submitted one until [[release]]. */
+  def df: DataFrame = dfV
   @volatile var status: JobStatus = JobStatus.Submitted
   @volatile var firstFetchAtMs: Long = -1L
   val fetchedPartitions = ConcurrentHashMap.newKeySet[Int]()
@@ -74,16 +78,38 @@ private[gateway] final class JobState(
   // in-flight stream fails loudly instead of silently crossing page
   // boundaries of two different row orders (post-shuffle recompute order
   // is not guaranteed stable).
-  lazy val pages = {
-    val ps = pageSize
-    val r = df.rdd.mapPartitions({ it =>
-      val token = System.nanoTime()
-      it.grouped(ps).map(g => (token, g.toArray))
-    }, preservesPartitioning = true)
-    r.persist(StorageLevel.MEMORY_AND_DISK)
-    r
+  private var pagesV: RDD[(Long, Array[Row])] = null
+  def pages: RDD[(Long, Array[Row])] = synchronized {
+    if (pagesV == null) {
+      val ps = pageSize
+      pagesV = df.rdd.mapPartitions({ it =>
+        val token = System.nanoTime()
+        it.grouped(ps).map(g => (token, g.toArray))
+      }, preservesPartitioning = true)
+      pagesV.persist(StorageLevel.MEMORY_AND_DISK)
+    }
+    pagesV
   }
-  def numPartitions: Int = pages.getNumPartitions
+  /** Fixed by the first materialization: the ticket count clients hold. */
+  lazy val numPartitions: Int = pages.getNumPartitions
+
+  /** Drop the executed query for a plan-only copy once the job is
+    * terminal. The executed QueryExecution and the pages lineage pin
+    * about 0.4 MB of gateway heap per job (planner bookkeeping, and the
+    * scan's broadcast Hadoop configuration, whose blocks stay in the
+    * block manager until the lineage is collected). The gateway keeps
+    * terminal handles for a re-fetch grace window, so without this the
+    * pinned heap grew with every job served in that window. A grace
+    * re-fetch re-plans from the analyzed plan (the alias is a fresh
+    * Dataset over the same logical plan) and rebuilds the pages, which
+    * the recompute already required. */
+  def release(): Unit = synchronized {
+    if (pagesV != null) {
+      try pagesV.unpersist(blocking = false) catch { case _: Throwable => () }
+      pagesV = null
+    }
+    dfV = dfV.as("graft_result")
+  }
   val completion = new CountDownLatch(1)
 }
 
@@ -192,6 +218,7 @@ final class PartitionRowStream private[gateway] (
       s"graft job ${st.jobId} partition $partition", interruptOnCancel = true)
     sc.setLocalProperty("spark.scheduler.pool", "graft-jobs")
     try {
+      val pages = st.pages // one lineage per stream, even if the job is released
       var k = 0
       var last = false
       var streamToken = -1L   // stamped by the first page job of this stream
@@ -200,7 +227,7 @@ final class PartitionRowStream private[gateway] (
         val pageIdx = k
         // Skip k cached page *arrays* (O(k) references), remembering the
         // boundary row of page k-1 and the partition's computation token.
-        val (token, skipped, boundary, page) = sc.runJob(st.pages,
+        val (token, skipped, boundary, page) = sc.runJob(pages,
           (it: Iterator[(Long, Array[Row])]) => {
             var tok = -1L
             var bnd: Row = null
@@ -414,21 +441,16 @@ final class JobRuntime(
       // handle: completion is inferred from a drained stream, and a drain
       // into a dead client socket looks identical to a real delivery (TCP
       // buffers absorb whole small partitions). The server's handle grace
-      // window bounds how long this stays reachable; the pages RDD was
-      // unpersisted at cleanup, so the re-fetch recomputes — the same
-      // re-execution discipline as the reference's task retry
-      // (dist/src/runtime.rs:499-525). Cancelled/Failed/TTL'd stay dead.
-      case JobStatus.Completed =>
-        // Re-persist for the grace re-fetch (ADVICE r15 medium): pages was
-        // unpersisted at cleanup, so WITHOUT a cache every page job would
-        // recompute the partition under a fresh nanoTime token and any
-        // multi-page re-fetch would die at page 1 with
-        // PartitionRecomputeException — the grace window only worked for
-        // single-page partitions. persist() after unpersist() re-marks the
-        // RDD (idempotent at the same level); the re-drain's cleanup
-        // unpersists again, so nothing is retained past the re-fetch.
-        try st.pages.persist(StorageLevel.MEMORY_AND_DISK)
-        catch { case scala.util.control.NonFatal(_) => () }
+      // window bounds how long this stays reachable; cleanup released the
+      // executed plan and its pages, so the re-fetch re-plans and
+      // recomputes — the same re-execution discipline as the reference's
+      // task retry (dist/src/runtime.rs:499-525). The rebuilt pages are
+      // persisted like the first ones (ADVICE r15 medium: uncached, every
+      // page job would recompute under a fresh token and a multi-page
+      // re-fetch would die at page 1 with PartitionRecomputeException);
+      // the re-drain's cleanup releases them again, so nothing is retained
+      // past the re-fetch. Cancelled/Failed/TTL'd stay dead.
+      case JobStatus.Completed => ()
       case _ =>
         throw new IllegalStateException(
           s"job ${st.jobId} is not live (cleaned up or cancelled)")
@@ -465,18 +487,22 @@ final class JobRuntime(
   private def cleanup(st: JobState, terminal: JobStatus): Unit = {
     registry.remove(st.jobId)
     st.status = terminal
-    try st.pages.unpersist(blocking = false) catch { case _: Throwable => () }
+    st.release()
     st.completion.countDown()
   }
 
   def liveJobIds: Set[String] = registry.keySet.asScala.toSet
 
+  /** Test hook: the handle of a live job submitted through another front
+    * end (the socket gateway keeps its own), for [[JobHandle.simulateBlockLoss]]. */
+  private[graft] def handleOf(jobId: String): Option[JobHandle] =
+    Option(registry.get(jobId)).map(new JobHandle(this, _))
+
   /** Registry snapshot as plain rows (job_id, created_at ms, job_meta JSON,
     * stages JSON) — the shared producer behind [[runningJobs]] and the
     * refresh-on-scan [[RunningJobsSource]] table. */
   private[gateway] def runningJobsSnapshot(): Seq[(String, Long, String, String)] = {
-    def jstr(s: String) =
-      "\"" + s.replace("\\", "\\\\").replace("\"", "\\\"") + "\""
+    import GatewayServer.jstr
     registry.values.asScala.toSeq.sortBy(_.jobId).map { st =>
       val metaJson = st.meta.toSeq.sortBy(_._1)
         .map { case (k, v) => s"${jstr(k)}: ${jstr(v)}" }

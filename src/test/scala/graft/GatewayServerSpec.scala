@@ -797,4 +797,105 @@ class GatewayServerSpec extends SparkSpec {
       assert(in.readLine().contains("\"ok\": true"))
     }
   }
+
+  test("fetch_arrow: a partition recomputed after the ack drops the connection; " +
+      "the client re-fetches the whole ticket instead of hanging") {
+    // 20000 rows in 50-row pages = 400 page jobs, so the block loss lands
+    // while the Arrow stream is still being written. Before the fix the
+    // server answered the recompute with a JSON error line inside the raw
+    // Arrow stream; the client read it as a message length and blocked.
+    val rt = new JobRuntime(spark, graft.gateway.GatewayConfig(fetchPageSize = 50))
+    val srv = new GatewayServer(rt, arrowBatchRows = 100)
+    val retries = new java.util.concurrent.atomic.AtomicInteger(0)
+    val client = new graft.gateway.GatewayClient("127.0.0.1", () => srv.boundPort,
+      sleeper = _ => { retries.incrementAndGet(); () }, jitterFrac = () => 0.0)
+    val pool = java.util.concurrent.Executors.newSingleThreadExecutor()
+    try {
+      val (job, parts) = client.submit("SELECT id, id * 11 AS v FROM range(0, 20000, 1, 1)")
+      assert(parts == 1)
+      val h = rt.handleOf(job).get
+      val fetch = pool.submit(() => scala.util.Try(client.fetchPartitionArrow(job, 0)))
+      // The first page job runs before the ack; lose the cached blocks
+      // right after it, between pages of the live stream.
+      val deadline = System.nanoTime() + 60.seconds.toNanos
+      while (h.maxPageRows == 0L && !fetch.isDone && System.nanoTime() < deadline) Thread.sleep(1)
+      h.simulateBlockLoss()
+      // A hang fails here; the stall it guards against never ends.
+      fetch.get(90, java.util.concurrent.TimeUnit.SECONDS) match {
+        case scala.util.Success(rows) =>
+          assert(rows == (0L until 20000L).map(i => org.apache.spark.sql.Row(i, i * 11)))
+          assert(retries.get >= 1, "the block loss never interrupted the stream")
+        case scala.util.Failure(e) =>
+          assert(e.isInstanceOf[graft.gateway.GatewayRequestException] ||
+            e.isInstanceOf[graft.gateway.GatewayTransportException], s"unclean failure: $e")
+      }
+    } finally { client.close(); pool.shutdownNow(); srv.close(); rt.close() }
+  }
+
+  test("a terminal handle kept for the grace window does not pin its executed " +
+      "query: the scans' broadcast blocks are reclaimed") {
+    // Each parquet scan broadcasts its Hadoop configuration; the blocks live
+    // as long as the executed plan does. Before terminal handles released
+    // their executed plan, every job in the grace window pinned them.
+    Tables.register(spark, sfDir, "orders")
+    val bm = org.apache.spark.SparkEnv.get.blockManager
+    def broadcastBlocks(): Int = bm.getMatchingBlockIds(_.isBroadcast).size
+    def settled(bound: Int): Int = {
+      val deadline = System.nanoTime() + 20.seconds.toNanos
+      var n = broadcastBlocks()
+      while (n > bound && System.nanoTime() < deadline) {
+        System.gc(); Thread.sleep(200); n = broadcastBlocks()
+      }
+      n
+    }
+    val before = settled(0)
+    val rt = new JobRuntime(spark)
+    val srv = new GatewayServer(rt, handleGraceMs = 600000)
+    val client = new graft.gateway.GatewayClient("127.0.0.1", () => srv.boundPort)
+    try {
+      for (k <- 0 until 15)
+        assert(client.fetchAllArrow(
+          s"SELECT o_orderkey FROM orders WHERE o_orderkey % 15 = $k").nonEmpty)
+      assert(srv.pinnedHandles == 15)
+      val after = settled(before + 4)
+      assert(after <= before + 4, s"$after broadcast blocks held, $before before 15 jobs")
+      // A grace re-fetch still works from the released plan.
+      val (job, _) = client.submit("SELECT o_orderkey FROM orders WHERE o_orderkey % 15 = 3")
+      val first = client.fetchPartitionArrow(job, 0)
+      assert(client.fetchPartitionArrow(job, 0) == first)
+    } finally { client.close(); srv.close(); rt.close() }
+  }
+
+  test("fetch_arrow serves timestamp_ntz date columns (orders.o_orderdate)") {
+    Tables.register(spark, sfDir, "orders")
+    val sql = "SELECT o_orderkey, o_orderdate FROM orders"
+    val want = spark.sql(sql)
+    assert(want.schema("o_orderdate").dataType == TimestampNTZType)
+    val rt = new JobRuntime(spark)
+    val srv = new GatewayServer(rt)
+    val client = new graft.gateway.GatewayClient("127.0.0.1", () => srv.boundPort)
+    try {
+      val got = client.fetchAllArrow(sql).sortBy(_.getLong(0))
+      val expected = want.collect().toVector.sortBy(_.getLong(0))
+      assert(got.nonEmpty && got.size == expected.size)
+      assert(got.head.get(1).isInstanceOf[java.time.LocalDateTime], got.head)
+      assert(got == expected)
+    } finally { client.close(); srv.close(); rt.close() }
+  }
+
+  test("GatewayClient sends multi-line SQL intact; the same connection serves the next query") {
+    val rt = new JobRuntime(spark)
+    val srv = new GatewayServer(rt)
+    // Any reconnect goes through the sleeper: a desynchronised connection
+    // would show up here as a transport retry.
+    val client = new graft.gateway.GatewayClient("127.0.0.1", () => srv.boundPort,
+      sleeper = _ => fail("the client reconnected: the connection desynchronised"))
+    try {
+      val sql = "SELECT id, id * 2 AS twice,\n\t'tab\there' AS s\r\n" +
+        "FROM range(0, 3, 1, 1) -- a trailing comment\nWHERE id >= 0"
+      assert(client.fetchAllArrow(sql) ==
+        (0L until 3L).map(i => org.apache.spark.sql.Row(i, i * 2, "tab\there")))
+      assert(client.fetchAllArrow("SELECT 42 AS answer") == Vector(org.apache.spark.sql.Row(42)))
+    } finally { client.close(); srv.close(); rt.close() }
+  }
 }

@@ -6,7 +6,7 @@ import java.nio.channels.Channels
 import org.apache.arrow.memory.RootAllocator
 import org.apache.arrow.vector._
 import org.apache.arrow.vector.ipc.ArrowStreamWriter
-import org.apache.arrow.vector.types.{DateUnit, FloatingPointPrecision}
+import org.apache.arrow.vector.types.{DateUnit, FloatingPointPrecision, TimeUnit => ArrowTimeUnit}
 import org.apache.arrow.vector.types.pojo.{ArrowType, Field, FieldType, Schema => ArrowSchema}
 import org.apache.spark.sql.types._
 import org.scalacheck.{Gen, Prop, Test => SCTest}
@@ -159,6 +159,40 @@ class TypeMappingSpec extends AnyFunSuite {
       assert(rows.head.isNullAt(0), s"$at: null slot decoded non-null")
       assert(!rows(1).isNullAt(0), s"$at: set slot decoded null")
     }
+  }
+
+  test("timestamp_ntz round-trips as a zone-less micros timestamp; tz-aware stays TimestampType") {
+    val schema = StructType(Seq(
+      StructField("ntz", TimestampNTZType), StructField("ts", TimestampType)))
+    val arrow = ArrowCodec.toArrowSchema(schema).getFields
+    assert(arrow.get(0).getType == new ArrowType.Timestamp(ArrowTimeUnit.MICROSECOND, null))
+    assert(arrow.get(1).getType == new ArrowType.Timestamp(ArrowTimeUnit.MICROSECOND, "UTC"))
+    // Property: any micros in years 0001..9999, pre-epoch included,
+    // encodes from LocalDateTime and decodes back to the same value (the
+    // zone-aware column rides along as null).
+    check("ntz", Prop.forAll(Gen.chooseNum(-62135596800000000L, 253402300799999999L)) { micros =>
+      val ldt = java.time.LocalDateTime.ofEpochSecond(Math.floorDiv(micros, 1000000L),
+        (Math.floorMod(micros, 1000000L) * 1000L).toInt, java.time.ZoneOffset.UTC)
+      val row = org.apache.spark.sql.Row(ldt, null)
+      val bos = new ByteArrayOutputStream()
+      ArrowCodec.write(schema, Iterator(row), bos, 16)
+      val (got, rows) = ArrowCodec.read(new ByteArrayInputStream(bos.toByteArray))
+      got == schema && rows == Vector(row)
+    })
+  }
+
+  test("a tz-less Arrow timestamp from another writer decodes to TimestampNTZType") {
+    val (schema, rows) = roundtrip(new ArrowType.Timestamp(ArrowTimeUnit.MICROSECOND, null)) { vec =>
+      val v = vec.asInstanceOf[TimeStampMicroVector]
+      v.setSafe(0, 795225600000000L) // 1995-03-15T00:00
+      v.setNull(1)
+      v.setSafe(2, -1L)              // one micro before the epoch
+      3
+    }
+    assert(schema.head.dataType == TimestampNTZType)
+    assert(rows.map(r => Option(r.get(0))) == Vector(
+      Some(java.time.LocalDateTime.of(1995, 3, 15, 0, 0)), None,
+      Some(java.time.LocalDateTime.of(1969, 12, 31, 23, 59, 59, 999999000))))
   }
 
   test("decimal precision > 38 is documented-unsupported: throws, never rounds") {
