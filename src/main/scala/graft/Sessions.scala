@@ -73,8 +73,10 @@ object Sessions {
             qe: org.apache.spark.sql.execution.QueryExecution, durationNs: Long): Unit =
           qe.observedMetrics.foreach { case (name, row) =>
             if (name.startsWith(pipeline.Dedup.GRID_METRIC_PREFIX) && !row.isNullAt(0)) {
-              val n = row.getInt(0) // max_bucket_n
-              val b = row.getInt(1) // max_grid_b
+              // Read as Number: a site may observe its max as a Long
+              // (containment's max(df) is a count).
+              val n = row.getAs[Number](0).intValue // max_bucket_n
+              val b = row.getAs[Number](1).intValue // max_grid_b
               Sessions.lastGridOccupancy.put(name, (n, b))
               // B > 1 IS the escalation, whatever the site's cell size
               // (each grid site — simhash/minhash bands, fuzzy grams,

@@ -46,8 +46,10 @@ final class GatewayClient(
     * BufferedInputStream (same null-at-EOF / content-to-EOF semantics as
     * BufferedReader.readLine) — a char-level reader's read-ahead would
     * swallow the raw Arrow bytes that follow a `fetch_arrow` ack on the
-    * same stream. */
+    * same stream. Nagle is off, as on the server: each request line is one
+    * write and must not wait for the ACK of the previous one. */
   private final class Conn(val sock: Socket) {
+    sock.setTcpNoDelay(true)
     val raw = new java.io.BufferedInputStream(sock.getInputStream)
     val out = new PrintWriter(sock.getOutputStream, true)
     def readLine(): String = {

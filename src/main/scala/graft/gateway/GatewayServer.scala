@@ -1,6 +1,7 @@
 package graft.gateway
 
-import java.io.{BufferedReader, InputStreamReader, PrintWriter}
+import java.io.{BufferedOutputStream, BufferedReader, InputStreamReader, OutputStream,
+  OutputStreamWriter, PrintWriter}
 import java.net.{ServerSocket, Socket, SocketException}
 import java.nio.charset.StandardCharsets
 import java.util.concurrent.{ConcurrentHashMap, Executors}
@@ -77,6 +78,16 @@ final case class GatewayAuth(user: String = "admin", password: String = "admin12
   *       -> one {"row": [...]} per row, then {"ok": true, "rows": N}
   *   {"op": "cancel", "job_id": "..."} -> {"ok": true}
   *   errors -> {"ok": false, "error": "..."}
+  *
+  * Flush discipline: every accepted socket sets `TCP_NODELAY`, and each
+  * connection writes through one 64 KB buffer shared by the JSON lines and
+  * the Arrow stream. A response (everything answering one request line,
+  * error answers included) is flushed once, when it is complete; a longer
+  * one also leaves each time the buffer fills, so a slow client still
+  * blocks the writer (backpressure). The server holds at most one fetch
+  * page, one encoded Arrow batch and the 64 KB buffer per connection. An
+  * ack written and flushed on its own would let Nagle hold the body until
+  * the client's delayed ACK — 40 ms per fetch on Linux.
   *
   * The accept loop and per-connection handlers run on daemon threads
   * (driver-side control plane only — row data streams straight from the
@@ -229,10 +240,17 @@ final class GatewayServer(runtime: JobRuntime, port: Int = 0,
       field(line, "token").exists(tokenValid)
 
   private def handle(sock: Socket): Unit = {
+    // Nagle off: a response's last segment leaves at once instead of
+    // waiting for the client's delayed ACK (40 ms on Linux) of the previous
+    // one. With one flush per response there are no small writes left for
+    // Nagle to coalesce.
+    sock.setTcpNoDelay(true)
     val in = new BufferedReader(
       new InputStreamReader(sock.getInputStream, StandardCharsets.UTF_8))
-    val raw = sock.getOutputStream
-    val out = new PrintWriter(raw, true)
+    // One buffer under both the JSON lines and the Arrow stream; `out` is
+    // flushed only when a response is complete.
+    val raw = new BufferedOutputStream(sock.getOutputStream, GatewayServer.ResponseBufferBytes)
+    val out = new PrintWriter(new OutputStreamWriter(raw, StandardCharsets.UTF_8))
     try {
       // The issuing connection rides its own token: when a tokenTtl is
       // configured, expiry forces a re-handshake even on this connection.
@@ -258,6 +276,8 @@ final class GatewayServer(runtime: JobRuntime, port: Int = 0,
             out.println(s"""{"ok": false, "error": ${jstr(
               Option(e.getMessage).getOrElse(e.getClass.getName))}}""")
         }
+        // The response is complete: its one socket flush.
+        out.flush()
         line = in.readLine()
       }
     } catch { case NonFatal(_) => () }
@@ -327,7 +347,7 @@ final class GatewayServer(runtime: JobRuntime, port: Int = 0,
     n
   }
 
-  private def dispatch(line: String, out: PrintWriter, raw: java.io.OutputStream): Unit = {
+  private def dispatch(line: String, out: PrintWriter, raw: OutputStream): Unit = {
     sweepHandles()
     field(line, "op") match {
       case Some("submit") =>
@@ -355,9 +375,10 @@ final class GatewayServer(runtime: JobRuntime, port: Int = 0,
         val ctoken = field(line, "ctoken")
         val h = handles.getOrElse(jobId,
           throw new IllegalStateException(s"unknown job $jobId"))
-        // Bounded streaming: rows go straight from ≤fetchPageSize-row pages
-        // to the socket. A slow client backpressures the page producer via
-        // blocking TCP writes — the reference's bounded-channel semantics
+        // Bounded streaming: rows go from ≤fetchPageSize-row pages through
+        // the connection buffer to the socket. A slow client backpressures
+        // the page producer via blocking TCP writes once the buffer fills —
+        // the reference's bounded-channel semantics
         // (dist/src/runtime.rs:253-303) end to end.
         val n = {
           val stream = h.fetchStream(Ticket(jobId, p))
@@ -431,7 +452,7 @@ final class GatewayServer(runtime: JobRuntime, port: Int = 0,
         // stream fed page-by-page from the bounded fetch, every buffer an
         // lz4-java frame of independent 64 KB blocks (Lz4FrameCodec) — at
         // no point does the server hold more than one page + one encoded
-        // batch.
+        // batch + the connection buffer.
         val stream = h.fetchStream(Ticket(jobId, p))
         var acked = false
         val n =
@@ -452,13 +473,12 @@ final class GatewayServer(runtime: JobRuntime, port: Int = 0,
             if (skipped < off)
               throw new FetchOffsetException(
                 s"offset $off beyond partition end ($skipped rows)")
-            out.println(s"""{"ok": true, "format": "arrow_ipc_stream", """ +
-              s""""token": ${jstr(tok.toString)}}""")
-            out.flush()
+            // Straight into the connection buffer, ahead of the Arrow bytes
+            // (nothing of this response is pending in `out`).
+            raw.write((s"""{"ok": true, "format": "arrow_ipc_stream", """ +
+              s""""token": ${jstr(tok.toString)}}\n""").getBytes(StandardCharsets.UTF_8))
             acked = true
-            val written = ArrowCodec.write(h.schema, stream, raw, arrowBatchRows)
-            raw.flush()
-            written
+            ArrowCodec.write(h.schema, stream, raw, arrowBatchRows)
           } catch {
             case e: Throwable =>
               // The handle survives for the client's fallback after a
@@ -516,6 +536,10 @@ final class GatewayServer(runtime: JobRuntime, port: Int = 0,
 }
 
 object GatewayServer {
+  /** Per-connection response buffer: a response leaves when it is complete
+    * or when this much of it is pending, whichever comes first. */
+  private val ResponseBufferBytes = 64 * 1024
+
   /** JSON string literal: quotes, backslashes and every control character
     * escaped, so a value never breaks the one-object-per-line framing.
     * Shared by the server, [[GatewayClient]] and the running_jobs JSON. */

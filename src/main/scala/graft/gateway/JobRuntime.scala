@@ -8,7 +8,9 @@ import scala.jdk.CollectionConverters._
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerStageCompleted, JobSucceeded}
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, Encoders, Row, SparkSession}
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.classic
 import org.apache.spark.sql.types._
 import org.apache.spark.storage.StorageLevel
 
@@ -45,15 +47,30 @@ final case class GatewayConfig(
   * (`integration-tests/app/src/main.rs:296-330`). */
 final case class Ticket(jobId: String, partition: Int)
 
+/** One job's registry entry. The job is fixed at submit by its logical
+  * plan (for a command, the plan over its already-produced output rows):
+  * the Dataset is dropped by [[release]], and a grace re-fetch rebuilds
+  * one from the plan, so a view replaced after submit does not change
+  * what a ticket returns, and a command does not run again. */
 private[gateway] final class JobState(
     val jobId: String,
     val createdAtMs: Long,
     val meta: Map[String, String],
     submitted: DataFrame,
     val pageSize: Int) {
-  @volatile private var dfV: DataFrame = submitted
-  /** The job's DataFrame: the submitted one until [[release]]. */
-  def df: DataFrame = dfV
+  /** The result schema, fixed at submit: reading it never plans. */
+  val schema: StructType = submitted.schema
+  private val session = submitted.queryExecution.sparkSession
+  private val plan: LogicalPlan = submitted.queryExecution.commandExecuted
+  private var dfV: DataFrame = submitted
+  /** The job's DataFrame: the submitted one until [[release]]; after it,
+    * one rebuilt from [[plan]] on first use. */
+  def df: DataFrame = synchronized {
+    if (dfV == null) dfV = new classic.Dataset[Row](session, plan, Encoders.row(schema))
+    dfV
+  }
+  /** The Dataset held now, without building one (a released job holds none). */
+  private[gateway] def heldDataset: Option[DataFrame] = synchronized(Option(dfV))
   @volatile var status: JobStatus = JobStatus.Submitted
   @volatile var firstFetchAtMs: Long = -1L
   val fetchedPartitions = ConcurrentHashMap.newKeySet[Int]()
@@ -93,22 +110,22 @@ private[gateway] final class JobState(
   /** Fixed by the first materialization: the ticket count clients hold. */
   lazy val numPartitions: Int = pages.getNumPartitions
 
-  /** Drop the executed query for a plan-only copy once the job is
-    * terminal. The executed QueryExecution and the pages lineage pin
-    * about 0.4 MB of gateway heap per job (planner bookkeeping, and the
-    * scan's broadcast Hadoop configuration, whose blocks stay in the
-    * block manager until the lineage is collected). The gateway keeps
-    * terminal handles for a re-fetch grace window, so without this the
-    * pinned heap grew with every job served in that window. A grace
-    * re-fetch re-plans from the analyzed plan (the alias is a fresh
-    * Dataset over the same logical plan) and rebuilds the pages, which
-    * the recompute already required. */
+  /** Keep only what a grace re-fetch needs once the job is terminal: the
+    * [[schema]] and the logical [[plan]]. The executed QueryExecution and
+    * the pages lineage pin about 0.4 MB of gateway heap per job (planner
+    * bookkeeping, and the scan's broadcast Hadoop configuration, whose
+    * blocks stay in the block manager until the lineage is collected), and
+    * even a fresh Dataset over the plan pins about 80 KB (its planning
+    * tracker's rule summaries). The gateway keeps terminal handles for a
+    * re-fetch grace window, so whatever a handle keeps grows with every job
+    * served in that window. A grace re-fetch re-plans from [[plan]] and
+    * rebuilds the pages, which the recompute already required. */
   def release(): Unit = synchronized {
     if (pagesV != null) {
       try pagesV.unpersist(blocking = false) catch { case _: Throwable => () }
       pagesV = null
     }
-    dfV = dfV.as("graft_result")
+    dfV = null
   }
   val completion = new CountDownLatch(1)
 }
@@ -126,7 +143,7 @@ final class PartitionRecomputeException(msg: String)
 /** Per-job result handle: tickets, per-partition fetch, cancellation. */
 final class JobHandle private[gateway] (runtime: JobRuntime, state: JobState) {
   def jobId: String = state.jobId
-  def schema: StructType = state.df.schema
+  def schema: StructType = state.schema
   def status: JobStatus = state.status
   /** One ticket per final-stage partition (lifecycle step 5 in SURVEY §3.1). */
   def tickets: Seq[Ticket] =
@@ -136,6 +153,9 @@ final class JobHandle private[gateway] (runtime: JobRuntime, state: JobState) {
     * re-reads the cached pre-paged stage — same semantics as the
     * reference's fresh-TaskSet re-execution. */
   def fetch(ticket: Ticket): Seq[Row] = runtime.fetch(state, ticket.partition)
+  /** Test hook: the Dataset the job holds now, if any. A released job
+    * holds none; its grace re-fetch rebuilds one from the logical plan. */
+  private[graft] def heldDataset: Option[DataFrame] = state.heldDataset
   /** Test hook: evict and re-mark the cached pages (simulates losing the
     * cached blocks to memory pressure / executor loss — the next page job
     * recomputes the partition and re-caches it under a new token). */
@@ -442,11 +462,11 @@ final class JobRuntime(
       // into a dead client socket looks identical to a real delivery (TCP
       // buffers absorb whole small partitions). The server's handle grace
       // window bounds how long this stays reachable; cleanup released the
-      // executed plan and its pages, so the re-fetch re-plans and
-      // recomputes — the same re-execution discipline as the reference's
-      // task retry (dist/src/runtime.rs:499-525). The rebuilt pages are
-      // persisted like the first ones (ADVICE r15 medium: uncached, every
-      // page job would recompute under a fresh token and a multi-page
+      // Dataset and its pages, so the re-fetch re-plans from the logical
+      // plan and recomputes — the same re-execution discipline as the
+      // reference's task retry (dist/src/runtime.rs:499-525). The rebuilt
+      // pages are persisted like the first ones (ADVICE r15 medium: uncached,
+      // every page job would recompute under a fresh token and a multi-page
       // re-fetch would die at page 1 with PartitionRecomputeException);
       // the re-drain's cleanup releases them again, so nothing is retained
       // past the re-fetch. Cancelled/Failed/TTL'd stay dead.

@@ -898,4 +898,126 @@ class GatewayServerSpec extends SparkSpec {
       assert(client.fetchAllArrow("SELECT 42 AS answer") == Vector(org.apache.spark.sql.Row(42)))
     } finally { client.close(); srv.close(); rt.close() }
   }
+
+  /** One raw protocol connection read byte-wise, so the Arrow body after a
+    * `fetch_arrow` ack stays on the same stream as the JSON lines. */
+  private final class RawConn(port: Int) extends AutoCloseable {
+    private val sock = new Socket("127.0.0.1", port)
+    val in = new java.io.BufferedInputStream(sock.getInputStream)
+    private val out = new PrintWriter(sock.getOutputStream, true)
+    def send(line: String): Unit = out.println(line)
+    def readLine(): String = {
+      val buf = new java.io.ByteArrayOutputStream(128)
+      var b = in.read()
+      while (b != -1 && b != '\n') { buf.write(b); b = in.read() }
+      new String(buf.toByteArray, StandardCharsets.UTF_8)
+    }
+    def submit(sql: String): String = {
+      send(s"""{"op": "submit", "sql": "$sql"}""")
+      """"job_id": "([^"]+)"""".r.findFirstMatchIn(readLine()).get.group(1)
+    }
+    override def close(): Unit = sock.close()
+  }
+
+  test("wire latency: a fetch's body and terminator follow its ack or header " +
+      "without a delayed-ACK stall") {
+    // A response written as an ack flushed on its own, then small body
+    // writes, left the body waiting under Nagle for the client's delayed
+    // ACK of the ack: at least 40 ms per fetch on Linux. The first page
+    // job runs before the ack/header, so the gap timed here is wire only.
+    val rt = new JobRuntime(spark)
+    val srv = new GatewayServer(rt, auth = None)
+    val c = new RawConn(srv.boundPort)
+    // The lower quartile: a stall hits every fetch, while a scheduling or
+    // GC pause on a loaded host hits a few, so one pause cannot fail this.
+    def lowerQuartile(xs: Seq[Double]): Double = xs.sorted.apply(xs.size / 4)
+    try {
+      val arrowGaps = (0 until 21).map { _ =>
+        val job = c.submit("SELECT 1 AS one")
+        c.send(s"""{"op": "fetch_arrow", "job_id": "$job", "partition": 0}""")
+        val ack = c.readLine()
+        val t0 = System.nanoTime()
+        assert(ack.contains("arrow_ipc_stream"), ack)
+        assert(ArrowCodec.read(c.in)._2 == Vector(org.apache.spark.sql.Row(1)))
+        val fin = c.readLine()
+        val gap = (System.nanoTime() - t0) / 1e6
+        assert(fin.contains("\"ok\": true"), fin)
+        gap
+      }
+      val textGaps = (0 until 21).map { _ =>
+        val job = c.submit("SELECT 1 AS one")
+        c.send(s"""{"op": "fetch", "job_id": "$job", "partition": 0}""")
+        val header = c.readLine()
+        val t0 = System.nanoTime()
+        assert(header.contains("\"format\": \"rows\""), header)
+        assert(c.readLine() == "{\"row\": [1]}")
+        val fin = c.readLine()
+        val gap = (System.nanoTime() - t0) / 1e6
+        assert(fin.contains("\"ok\": true, \"rows\": 1"), fin)
+        gap
+      }
+      assert(lowerQuartile(arrowGaps) < 20.0, s"fetch_arrow ack -> terminator gaps (ms): $arrowGaps")
+      assert(lowerQuartile(textGaps) < 20.0, s"fetch header -> terminator gaps (ms): $textGaps")
+    } finally { c.close(); srv.close(); rt.close() }
+  }
+
+  test("a drained job kept for the grace window holds no Dataset; a grace " +
+      "re-fetch re-plans from its logical plan and returns identical rows") {
+    val rt = new JobRuntime(spark, graft.gateway.GatewayConfig(fetchPageSize = 16))
+    val srv = new GatewayServer(rt, handleGraceMs = 600000)
+    val client = new graft.gateway.GatewayClient("127.0.0.1", () => srv.boundPort)
+    try {
+      val (job, parts) = client.submit("SELECT id, id * 3 AS t FROM range(0, 50, 1, 1)")
+      assert(parts == 1)
+      val h = rt.handleOf(job).get
+      val firstPlan = new java.lang.ref.WeakReference(h.heldDataset.get.queryExecution)
+      val first = client.fetchPartitionArrow(job, 0)
+      assert(first == (0L until 50L).map(i => org.apache.spark.sql.Row(i, i * 3)))
+      assert(srv.pinnedHandles == 1 && rt.handleOf(job).isEmpty, "job should be terminal")
+      // The schema is a value kept from submit: reading it plans nothing.
+      assert(h.schema.fieldNames.toSeq == Seq("id", "t"))
+      assert(h.heldDataset.isEmpty, "a released job still holds a Dataset")
+      val deadline = System.nanoTime() + 20.seconds.toNanos
+      while (firstPlan.get != null && System.nanoTime() < deadline) {
+        System.gc(); Thread.sleep(100)
+      }
+      assert(firstPlan.get == null, "the drained job's QueryExecution is still reachable")
+      // Grace re-fetches, Arrow and text, re-plan (4 pages each) and
+      // release again when they drain.
+      assert(client.fetchPartitionArrow(job, 0) == first)
+      assert(client.fetchPartition(job, 0).size == 50)
+      assert(h.heldDataset.isEmpty && srv.pinnedHandles == 1)
+    } finally { client.close(); srv.close(); rt.close() }
+  }
+
+  test("a grace re-fetch returns the submitted plan's rows after its view is " +
+      "replaced, and does not run a command again") {
+    val rt = new JobRuntime(spark, graft.gateway.GatewayConfig(fetchPageSize = 16))
+    val srv = new GatewayServer(rt, handleGraceMs = 600000)
+    val client = new graft.gateway.GatewayClient("127.0.0.1", () => srv.boundPort)
+    try {
+      spark.range(0, 40, 1, 1).toDF("id").createOrReplaceTempView("graft_grace_view")
+      val (job, _) = client.submit("SELECT id FROM graft_grace_view")
+      val first = client.fetchPartitionArrow(job, 0)
+      assert(first == (0L until 40L).map(org.apache.spark.sql.Row(_)))
+      assert(rt.handleOf(job).isEmpty, "job should be terminal")
+      // Another client replaces the view, with other rows and columns,
+      // inside the grace window.
+      spark.range(100, 103, 1, 2).selectExpr("id * 2 AS id", "'x' AS extra")
+        .createOrReplaceTempView("graft_grace_view")
+      assert(client.fetchPartitionArrow(job, 0) == first)
+      assert(client.fetchPartition(job, 0).size == 40)
+
+      val (set, setParts) = client.submit("SET graft.grace.probe=a")
+      def setRows = (0 until setParts).flatMap(client.fetchPartitionArrow(set, _))
+      assert(setRows == Seq(org.apache.spark.sql.Row("graft.grace.probe", "a")))
+      spark.conf.set("graft.grace.probe", "b")
+      assert(setRows == Seq(org.apache.spark.sql.Row("graft.grace.probe", "a")))
+      assert(spark.conf.get("graft.grace.probe") == "b", "the SET ran again on re-fetch")
+    } finally {
+      spark.catalog.dropTempView("graft_grace_view")
+      spark.conf.unset("graft.grace.probe")
+      client.close(); srv.close(); rt.close()
+    }
+  }
 }

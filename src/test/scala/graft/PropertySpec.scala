@@ -765,6 +765,38 @@ class SkewSpec extends SparkSpec {
     assert(m._2 >= 2, s"grid should escalate past one block: $m")
   }
 
+  test("grid occupancy witness records the containment grid (a Long max(df) metric)") {
+    // The containment site observes max(df), a count, so its row holds a
+    // Long where the other sites hold Ints. The listener once read it with
+    // getInt, threw ClassCastException on the listener bus, and never
+    // recorded the containment decision.
+    import graft.pipeline.Dedup
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("graft-contain-grid").toString
+    def doc(lo: Int, hi: Int) = (lo to hi).map(i => s"t$i").mkString(" ")
+    Seq((1L, doc(1, 12), "en", "t", 0L), (2L, doc(1, 60), "en", "t", 0L),
+        (3L, doc(100, 120), "en", "t", 0L))
+      .toDF("doc_id", "text", "lang", "source", "n_chars")
+      .write.mode("overwrite").parquet(s"$dir/documents.parquet")
+    val metric = Dedup.GRID_METRIC_PREFIX + "containment"
+    Sessions.lastGridOccupancy.remove(metric)
+    Sessions.clearGridSite(metric)
+    SparkEntry.queries("q_dedup_containment")(spark, dir)
+      .write.format("noop").mode("overwrite").save()
+    val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+    var m: (Int, Int) = null
+    while (m == null && System.nanoTime() < deadline) {
+      m = Sessions.lastGridOccupancy.get(metric)
+      if (m == null) Thread.sleep(50)
+    }
+    assert(m != null, "containment grid metric never arrived on the listener bus")
+    // Docs 1 and 2 share their head shingles: the largest posting list is
+    // 2 documents, one grid block.
+    assert(m == ((2, 1)), s"unexpected containment occupancy: $m")
+    assert(Sessions.latestGridDecision(metric).exists(_.regime == "linear"),
+      s"no linear containment decision: ${Sessions.latestGridDecision(metric)}")
+  }
+
   test("saltedBroadcastJoin equals the plain join") {
     val fact = spark.range(0, 50000)
       .select((col("id") % 5).as("fk"), col("id").as("v"))
