@@ -1,5 +1,7 @@
 package graft
 
+import graft.Json.jstr
+
 /** Benchmark main — driver runs this per round at sf0.1 (BENCH_r{N}.json).
   *
   * Methodology (VERDICT.md round-1 fixes):
@@ -190,9 +192,6 @@ object Bench {
       loadStart, loadMax, gcStart, gcEnd, heapStart, heapEnd, upStart, upEnd,
       heapLiveStart, canaries.toSeq)
   }
-
-  private def jstr(s: String) =
-    "\"" + s.replace("\\", "\\\\").replace("\"", "\\\"") + "\""
 
   /** Render a record as the one-line JSON contract. `kept` bounds the
     * per-query WALL map; `detail` bounds the per-query gc_ms/io_read_mb

@@ -144,9 +144,7 @@ object ClusterParity {
     val clusterSec = (System.nanoTime() - t1) / 1e9
     cluster.stop()
 
-    def jarr(xs: List[String]) =
-      xs.reverse.map(s => "\"" + s.replace("\\", "\\\\").replace("\"", "\\\"") + "\"")
-        .mkString("[", ",", "]")
+    def jarr(xs: List[String]) = xs.reverse.map(Json.jstr).mkString("[", ",", "]")
     println(s"""{"metric":"cluster_parity","queries":${names.size},""" +
       s""""matched":${matched.size},"topology":${jarr(topology)},""" +
       s""""diverged":${jarr(diverged)},""" +

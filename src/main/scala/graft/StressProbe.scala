@@ -6,6 +6,7 @@ import java.nio.charset.StandardCharsets
 import java.util.concurrent.Executors
 import java.util.concurrent.atomic.AtomicLong
 
+import graft.Json.jstr
 import graft.gateway.{GatewayServer, JobRuntime}
 
 /** Concurrency-at-scale probe: drives the REAL socket gateway (TCP
@@ -141,15 +142,6 @@ object StressProbe {
       pool.shutdownNow(); srv.close(); rt.close(); spark.stop()
     }
   }
-
-  private def jstr(s: String): String =
-    "\"" + s.flatMap {
-      case '"' => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => " "
-      case c if c < ' ' => " "
-      case c => c.toString
-    } + "\""
 
   private def loadAvg(): Double =
     java.lang.management.ManagementFactory.getOperatingSystemMXBean.getSystemLoadAverage

@@ -64,7 +64,7 @@ final class GatewayClient(
 
   // Escapes control characters too: a raw newline in multi-line SQL would
   // end the request line early and desynchronise the connection.
-  import GatewayServer.jstr
+  import graft.Json.jstr
 
   private def connect(): Conn = {
     val c = new Conn(new Socket(host, port()))

@@ -1,11 +1,22 @@
 package graft.gateway
 
 import graft.{QueryDef, Tables}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** CORRECTNESS-gate entries for the gateway layer (SURVEY §2.3 rows 62-65):
-  * the `running_jobs` virtual table observed mid-lifecycle. */
+  * the observability views observed mid-lifecycle. The views are
+  * refresh-on-scan and die with their runtime (reference table.rs:43-60),
+  * so each entry collects its observation before `close()` and returns it
+  * as a local relation the gate evaluates afterwards. */
 object GatewayQueries {
+
+  /** A collected observation as a DataFrame over the observed result's
+    * own schema. A few registry rows, driver-local by design — not a data
+    * path. */
+  private def local(s: SparkSession, rows: Array[Row], schema: StructType): DataFrame =
+    s.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
 
   /** Submit two tracked-but-unfetched jobs, snapshot `running_jobs` via SQL.
     * job_id/created_at are run-specific, so the checked output is the
@@ -22,16 +33,8 @@ object GatewayQueries {
           Tables.t(s, d, "nation").groupBy(col("n_regionkey")).count(),
           Map("name" -> "job-b"))
         rt.registerRunningJobsView()
-        // The view is refresh-on-scan and dies with the runtime (reference
-        // table.rs:43-60), so materialize the mid-lifecycle observation
-        // into a LocalRelation the driver can evaluate after close().
-        // Two registry rows — driver-local by design, not a data path.
-        val observed = s.sql(
-          "SELECT job_meta FROM running_jobs ORDER BY job_meta").collect()
-        s.createDataFrame(java.util.Arrays.asList(observed: _*),
-          org.apache.spark.sql.types.StructType(Seq(
-            org.apache.spark.sql.types.StructField(
-              "job_meta", org.apache.spark.sql.types.StringType, nullable = false))))
+        val observed = s.sql("SELECT job_meta FROM running_jobs ORDER BY job_meta")
+        local(s, observed.collect(), observed.schema)
       } finally rt.close()
     },
     Some("""SELECT job_meta
@@ -47,13 +50,14 @@ object GatewayQueries {
       val rt = new JobRuntime(s)
       try {
         rt.registerClusterNodesView()
-        s.sql("""SELECT status, count(*) AS n_nodes FROM cluster_nodes
+        val observed = s.sql("""SELECT status, count(*) AS n_nodes FROM cluster_nodes
           WHERE cpu_cores > 0 AND total_memory > 0 GROUP BY status""")
+        local(s, observed.collect(), observed.schema)
       } finally rt.close()
     },
     Some("SELECT 'Available' AS status, CAST(1 AS BIGINT) AS n_nodes"))
 
-  /** The `grid_decisions` observability view (refresh-on-scan DSv2 over
+  /** The `grid_decisions` observability view (refresh-on-scan over
     * [[graft.Sessions.gridHistory]]): run one grid-bearing dedup query
     * to populate the registry, wait for its decision to land on the
     * listener bus, then observe the view via SQL. Deterministic at the
@@ -62,7 +66,7 @@ object GatewayQueries {
     * (the escalated/saturated regimes are spec-gated in SkewSpec, where
     * the corpus is constructed). */
   private val gridObservedCache = new java.util.concurrent.ConcurrentHashMap[
-    String, java.util.concurrent.CompletableFuture[Array[org.apache.spark.sql.Row]]]()
+    String, java.util.concurrent.CompletableFuture[(Array[Row], StructType)]]()
 
   private val gridDecisions = QueryDef(
     "q_grid_decisions",
@@ -72,7 +76,7 @@ object GatewayQueries {
       // observation is deterministic per corpus, so repeated builds serve
       // the cached rows; a regenerated corpus re-certifies.
       val token = Tables.contentToken(s"$d/documents.parquet")
-      val observed = Tables.keyedOnce(gridObservedCache, token)(
+      val (rows, schema) = Tables.keyedOnce(gridObservedCache, token)(
         Tables.staleSibling(token, _)) {
         val metric = graft.pipeline.Dedup.GRID_METRIC_PREFIX + "minhash"
         // Fail FAST on a session that can never deliver a decision —
@@ -110,24 +114,18 @@ object GatewayQueries {
           // Latest decision for the site = max-seq row (the view exposes
           // the full bounded history; earlier certifications remain
           // visible but this gate checks the current regime).
-          s.sql("""SELECT site, regime,
+          val observed = s.sql("""SELECT site, regime,
               CAST(recommendation IS NULL AS BOOLEAN) AS no_escape
             FROM grid_decisions WHERE site = 'minhash'
-            ORDER BY seq DESC LIMIT 1""").collect()
+            ORDER BY seq DESC LIMIT 1""")
+          (observed.collect(), observed.schema)
         } finally rt.close()
       }
-      s.createDataFrame(java.util.Arrays.asList(observed: _*),
-        org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("site",
-            org.apache.spark.sql.types.StringType, nullable = false),
-          org.apache.spark.sql.types.StructField("regime",
-            org.apache.spark.sql.types.StringType, nullable = false),
-          org.apache.spark.sql.types.StructField("no_escape",
-            org.apache.spark.sql.types.BooleanType, nullable = false))))
+      local(s, rows, schema)
     },
     Some("""SELECT 'minhash' AS site, 'linear' AS regime, TRUE AS no_escape"""))
 
-  /** The `store_occupancy` observability view (refresh-on-scan DSv2 over
+  /** The `store_occupancy` observability view (refresh-on-scan over
     * [[graft.Tables.storeRegistry]]): warm one store family (the
     * near-dup pair store and its shingle index, via
     * [[graft.pipeline.Dedup.materializedPairs]]), then observe the view.
@@ -148,25 +146,17 @@ object GatewayQueries {
       try {
         rt.registerStoreOccupancyView()
         // coalesce(…, FALSE): with an EMPTY registry (warm store evicted
-        // between the warm-up above and this scan) sum/any_value are NULL;
-        // stuffing NULL into the non-null BooleanType fields below is
-        // undefined behavior at row encoding (ADVICE r13). FALSE makes the
-        // edge fail loudly AT THE GATE (a red store_present row) instead.
+        // between the warm-up above and this scan) sum/any_value are NULL.
+        // FALSE keeps the columns non-null and makes that edge fail loudly
+        // AT THE GATE (a red store_present row) instead.
         val observed = s.sql(
           """SELECT count(*) >= 1 AS store_present,
                coalesce(count(*) <= any_value(count_cap), FALSE)
                  AS within_count_cap,
                coalesce(sum(bytes) <= any_value(bytes_cap), FALSE)
                  AS within_bytes_cap
-             FROM store_occupancy""").collect()
-        s.createDataFrame(java.util.Arrays.asList(observed: _*),
-          org.apache.spark.sql.types.StructType(Seq(
-            org.apache.spark.sql.types.StructField("store_present",
-              org.apache.spark.sql.types.BooleanType, nullable = false),
-            org.apache.spark.sql.types.StructField("within_count_cap",
-              org.apache.spark.sql.types.BooleanType, nullable = false),
-            org.apache.spark.sql.types.StructField("within_bytes_cap",
-              org.apache.spark.sql.types.BooleanType, nullable = false))))
+             FROM store_occupancy""")
+        local(s, observed.collect(), observed.schema)
       } finally rt.close()
     },
     Some("""SELECT TRUE AS store_present, TRUE AS within_count_cap,

@@ -121,7 +121,7 @@ final class GatewayServer(runtime: JobRuntime, port: Int = 0,
   acceptor.start()
 
   // --- tiny JSON helpers (no deps; values are strings/numbers/objects) ---
-  import GatewayServer.jstr
+  import graft.Json.jstr
 
   private def jval(v: Any): String = v match {
     case null => "null"
@@ -504,14 +504,8 @@ final class GatewayServer(runtime: JobRuntime, port: Int = 0,
           case _ => ()
         }
         out.println(s"""{"ok": true, "rows": $n}""")
-      case Some("running_jobs") =>
-        val n = streamRows(runtime.runningJobs().collect().iterator, out)
-        out.println(s"""{"ok": true, "rows": $n}""")
-      case Some("cluster_nodes") =>
-        val n = streamRows(runtime.clusterNodes().collect().iterator, out)
-        out.println(s"""{"ok": true, "rows": $n}""")
-      case Some("store_occupancy") =>
-        val n = streamRows(runtime.storeOccupancy().collect().iterator, out)
+      case Some(view @ ("running_jobs" | "cluster_nodes" | "store_occupancy")) =>
+        val n = streamRows(runtime.snapshot(view).collect().iterator, out)
         out.println(s"""{"ok": true, "rows": $n}""")
       case Some("cancel") =>
         field(line, "job_id").foreach { id =>
@@ -539,20 +533,6 @@ object GatewayServer {
   /** Per-connection response buffer: a response leaves when it is complete
     * or when this much of it is pending, whichever comes first. */
   private val ResponseBufferBytes = 64 * 1024
-
-  /** JSON string literal: quotes, backslashes and every control character
-    * escaped, so a value never breaks the one-object-per-line framing.
-    * Shared by the server, [[GatewayClient]] and the running_jobs JSON. */
-  private[gateway] def jstr(s: String): String =
-    "\"" + s.flatMap {
-      case '"' => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
 }
 
 /** A fetch_arrow failure after the ack line: the connection handler closes

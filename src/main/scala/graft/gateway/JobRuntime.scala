@@ -369,10 +369,10 @@ final class JobRuntime(
 
   private val registry = new ConcurrentHashMap[String, JobState]()
 
-  /** Identity for refresh-on-scan views: [[RunningJobsSource]] resolves the
+  /** Identity for refresh-on-scan views: [[SnapshotSource]] resolves the
     * live runtime by this id at every scan. */
   val runtimeId: String = UUID.randomUUID().toString
-  RunningJobsSource.runtimes.put(runtimeId, this)
+  SnapshotSource.runtimes.put(runtimeId, this)
 
   /** Graceful-shutdown latch: a Terminating gateway rejects new work but
     * lets live jobs drain (reference `dist/src/runtime.rs:120-126,320-325`:
@@ -518,11 +518,40 @@ final class JobRuntime(
   private[graft] def handleOf(jobId: String): Option[JobHandle] =
     Option(registry.get(jobId)).map(new JobHandle(this, _))
 
-  /** Registry snapshot as plain rows (job_id, created_at ms, job_meta JSON,
-    * stages JSON) — the shared producer behind [[runningJobs]] and the
-    * refresh-on-scan [[RunningJobsSource]] table. */
-  private[gateway] def runningJobsSnapshot(): Seq[(String, Long, String, String)] = {
-    import GatewayServer.jstr
+  /** The observability views by name: each one's schema and the producer
+    * of its rows. [[SnapshotSource]] serves them as refresh-on-scan tables,
+    * calling a view's producer on every scan of it. */
+  private[gateway] val views: Map[String, (StructType, () => Seq[Row])] = Map(
+    // Reference schema, `dist/src/util.rs:148-158`.
+    "running_jobs" -> (StructType.fromDDL("job_id STRING NOT NULL, " +
+      "created_at TIMESTAMP_LTZ NOT NULL, job_meta STRING NOT NULL, " +
+      "stages STRING NOT NULL"), () => runningJobRows()),
+    "cluster_nodes" -> (StructType.fromDDL("host STRING NOT NULL, " +
+      "port INT NOT NULL, status STRING NOT NULL, total_memory BIGINT NOT NULL, " +
+      "free_memory BIGINT NOT NULL, used_storage_memory BIGINT NOT NULL, " +
+      "cpu_cores INT NOT NULL, running_tasks INT NOT NULL"), () => clusterNodeRows()),
+    "grid_decisions" -> (StructType.fromDDL("site STRING NOT NULL, " +
+      "max_bucket INT NOT NULL, grid_b INT NOT NULL, regime STRING NOT NULL, " +
+      "recommendation STRING, observed_at TIMESTAMP_LTZ NOT NULL, seq BIGINT NOT NULL"),
+      () => gridDecisionRows()),
+    "store_occupancy" -> (StructType.fromDDL("store STRING NOT NULL, " +
+      "corpus_key STRING NOT NULL, bytes BIGINT NOT NULL, " +
+      "last_access_seq BIGINT NOT NULL, count_cap INT NOT NULL, " +
+      "bytes_cap BIGINT NOT NULL, evictions BIGINT NOT NULL"),
+      () => storeOccupancyRows()))
+
+  /** One of [[views]] as a DataFrame over [[SnapshotSource]]: every query
+    * over it re-runs the view's producer. */
+  private[gateway] def snapshot(view: String): DataFrame =
+    spark.read.format("graft-snapshot").option("runtimeId", runtimeId)
+      .option("view", view).load()
+
+  private def registerView(view: String): Unit =
+    snapshot(view).createOrReplaceTempView(view)
+
+  /** The job registry: job_id, created_at, job_meta JSON, stages JSON. */
+  private def runningJobRows(): Seq[Row] = {
+    import graft.Json.jstr
     registry.values.asScala.toSeq.sortBy(_.jobId).map { st =>
       val metaJson = st.meta.toSeq.sortBy(_._1)
         .map { case (k, v) => s"${jstr(k)}: ${jstr(v)}" }
@@ -535,21 +564,16 @@ final class JobRuntime(
           s"${jstr(sid.toString)}: {\"num_tasks\": $n, \"state\": ${jstr(state)}}" }
         :+ resultEntry)
         .mkString("{", ", ", "}")
-      (st.jobId, st.createdAtMs, metaJson, stagesJson)
+      Row(st.jobId, new java.sql.Timestamp(st.createdAtMs), metaJson, stagesJson)
     }
   }
 
   /** The `running_jobs` observability relation — schema per
-    * `dist/src/util.rs:148-158` (job_id, created_at ms, job_meta JSON,
-    * stages JSON), queryable like any other table. This DataFrame is a
-    * point-in-time snapshot (LocalTableScan); for the always-fresh SQL
-    * view use [[registerRunningJobsView]]. */
-  def runningJobs(): DataFrame = {
-    val rows = runningJobsSnapshot().map { case (id, ms, meta, stages) =>
-      Row(id, new java.sql.Timestamp(ms), meta, stages)
-    }
-    spark.createDataFrame(rows.asJava, RunningJobsSource.schema)
-  }
+    * `dist/src/util.rs:148-158` (job_id, created_at, job_meta JSON, stages
+    * JSON), queryable like any other table. Every query over this
+    * DataFrame re-reads the registry; [[registerRunningJobsView]] serves
+    * the same table to SQL. Like every view here it dies with [[close]]. */
+  def runningJobs(): DataFrame = snapshot("running_jobs")
 
   /** Register `running_jobs` as a refresh-on-scan SQL view: the backing
     * DataSource V2 table re-snapshots this runtime's registry during the
@@ -557,56 +581,60 @@ final class JobRuntime(
     * `RunningJobsTable.scan` re-reading the registry per scan
     * (`integration-tests/app/src/table.rs:43-60`). One registration serves
     * the runtime's whole life; the view dies with [[close]]. */
-  def registerRunningJobsView(): Unit =
-    spark.read.format("graft-running-jobs").option("runtimeId", runtimeId)
-      .load().createOrReplaceTempView("running_jobs")
+  def registerRunningJobsView(): Unit = registerView("running_jobs")
+
+  /** Decision history, oldest first per site; `seq` is the process-monotonic
+    * record order (`observed_at` can tie inside one ms), so a site's latest
+    * decision is its max-`seq` row. */
+  private def gridDecisionRows(): Seq[Row] =
+    graft.Sessions.gridHistory.values.asScala.toSeq.flatten
+      .sortBy(o => (o.decision.site, o.seq)).map { o =>
+        val d = o.decision
+        Row(d.site, d.maxBucket, d.gridB, d.regime, d.recommendation.orNull,
+          new java.sql.Timestamp(o.observedAtMs), o.seq)
+      }
 
   /** Register `grid_decisions` — the dedup grids' occupancy-decision
-    * registry ([[graft.Sessions.gridHistory]]) as a refresh-on-scan SQL
+    * registry ([[graft.Sessions.gridHistory]], filled by the query-execution
+    * listener from each grid's `observe()` witness) as a refresh-on-scan SQL
     * view, same discipline as `running_jobs`: a dashboard polls
     * `SELECT * FROM grid_decisions WHERE regime <> 'linear'` and sees
     * escalations (and the saturated regime's strategy recommendation) the
-    * moment the witness listener records them. */
-  def registerGridDecisionsView(): Unit =
-    spark.read.format("graft-grid-decisions")
-      .load().createOrReplaceTempView("grid_decisions")
+    * moment the witness listener records them. The bounded per-site history
+    * keeps an escalation that later clears visible to a dashboard that polls
+    * less often than queries run. */
+  def registerGridDecisionsView(): Unit = registerView("grid_decisions")
 
-  /** Register `store_occupancy` — the content-keyed temp-store registry
-    * ([[graft.Tables.storeRegistry]]) as a refresh-on-scan SQL view, same
-    * discipline as `grid_decisions`: one row per live persisted store
-    * with bytes + LRU access seq + the caps and eviction counter, so a
-    * long-lived gateway's operator can watch the store budget hold. */
-  def registerStoreOccupancyView(): Unit =
-    spark.read.format("graft-store-occupancy")
-      .load().createOrReplaceTempView("store_occupancy")
-
-  /** Point-in-time `store_occupancy` snapshot (the [[runningJobs]] shape)
-    * — the socket gateway's `store_occupancy` op reads this, so a remote
-    * operator polls the store budget without registering views. */
-  def storeOccupancy(): DataFrame = {
+  /** One row per live persisted store ([[graft.Tables.storeRegistry]]) with
+    * its on-disk bytes and LRU access sequence, plus the caps and the
+    * eviction counter as constant columns (a grand-total footer that keeps
+    * the view one relation). */
+  private def storeOccupancyRows(): Seq[Row] = {
     val (cap, bcap, ev) = (graft.Tables.storeCountCap,
       graft.Tables.storeBytesCap, graft.Tables.storeEvictions.get())
-    val rows = graft.Tables.storeOccupancySnapshot
-      .sortBy(r => (r._1, r._2))
-      .map { case (store, key, bytes, seq) =>
-        Row(store, key, bytes, seq, cap, bcap, ev)
-      }
-    spark.createDataFrame(rows.asJava, StoreOccupancySource.schema)
+    graft.Tables.storeOccupancySnapshot.sortBy(r => (r._1, r._2)).map {
+      case (store, key, bytes, seq) => Row(store, key, bytes, seq, cap, bcap, ev)
+    }
   }
 
-  /** Cluster/heartbeat observability — the reference's `cluster_nodes`
-    * membership table fed by `Heartbeater` upserts
-    * (`dist/src/heartbeat.rs:21-73`, `clusters/postgres/src/cluster.rs:
-    * 62-193`: NodeId{host,port} + NodeState{status, memory, cpu, running
-    * tasks}). Spark maintains the same state natively via executor
-    * heartbeats; this surfaces the status tracker's live view as SQL. On
-    * local[n] there is exactly one row (the driver executor); on a
-    * 1000-executor cluster, one per executor. */
-  def clusterNodes(): DataFrame = {
+  /** Register `store_occupancy` — the content-keyed temp-store registry
+    * as a refresh-on-scan SQL view, so a long-lived gateway's operator
+    * polls `SELECT store, count(*), sum(bytes) FROM store_occupancy GROUP
+    * BY 1` and watches the LRU budget ([[graft.Tables.storeCountCap]] /
+    * [[graft.Tables.storeBytesCap]]) hold as corpora come and go. */
+  def registerStoreOccupancyView(): Unit = registerView("store_occupancy")
+
+  /** The `store_occupancy` relation as a DataFrame (the [[runningJobs]]
+    * shape) — the socket gateway's `store_occupancy` op reads it, so a
+    * remote operator polls the store budget without registering views. */
+  def storeOccupancy(): DataFrame = snapshot("store_occupancy")
+
+  /** Executor membership: per-executor cores are the executor conf on a
+    * real cluster and the thread count on local[n]. Driver-JVM Runtime
+    * values would be wrong on a multi-executor cluster (every row would
+    * report driver-local memory/cpu). */
+  private def clusterNodeRows(): Seq[Row] = {
     val sc = spark.sparkContext
-    // Per-executor cores: executor conf on a real cluster; thread count on
-    // local[n]. Driver-JVM Runtime values would be wrong on a multi-executor
-    // cluster (every row would report driver-local memory/cpu).
     // Covers local[N], local[*], and local[N,maxFailures].
     val localN = """local\[(\d+|\*)(?:,\d+)?\]""".r
     val coresPerExecutor = sc.master match {
@@ -618,30 +646,31 @@ final class JobRuntime(
     // Terminating gateway drains — visible in the membership view so
     // schedulers stop routing to it.
     val status = if (terminating) "Terminating" else "Available"
-    val rows = sc.statusTracker.getExecutorInfos.toSeq.map { e =>
+    sc.statusTracker.getExecutorInfos.toSeq.map { e =>
       val total = e.totalOnHeapStorageMemory() + e.totalOffHeapStorageMemory()
       val used = e.usedOnHeapStorageMemory() + e.usedOffHeapStorageMemory()
       Row(e.host(), e.port(), status,
         total, total - used, used,
         coresPerExecutor, e.numRunningTasks())
     }
-    val schema = StructType(Seq(
-      StructField("host", StringType, nullable = false),
-      StructField("port", IntegerType, nullable = false),
-      StructField("status", StringType, nullable = false),
-      StructField("total_memory", LongType, nullable = false),
-      StructField("free_memory", LongType, nullable = false),
-      StructField("used_storage_memory", LongType, nullable = false),
-      StructField("cpu_cores", IntegerType, nullable = false),
-      StructField("running_tasks", IntegerType, nullable = false)))
-    spark.createDataFrame(rows.asJava, schema)
   }
 
-  def registerClusterNodesView(): Unit =
-    clusterNodes().createOrReplaceTempView("cluster_nodes")
+  /** Cluster/heartbeat observability — the reference's `cluster_nodes`
+    * membership table fed by `Heartbeater` upserts
+    * (`dist/src/heartbeat.rs:21-73`, `clusters/postgres/src/cluster.rs:
+    * 62-193`: NodeId{host,port} + NodeState{status, memory, cpu, running
+    * tasks}). Spark maintains the same state natively via executor
+    * heartbeats; this surfaces the status tracker's live view as SQL, read
+    * afresh by every query. On local[n] there is exactly one row (the
+    * driver executor); on a 1000-executor cluster, one per executor. */
+  def clusterNodes(): DataFrame = snapshot("cluster_nodes")
+
+  /** Register `cluster_nodes` as a refresh-on-scan SQL view: a gateway that
+    * begins shutting down shows as `Terminating` on the next scan. */
+  def registerClusterNodesView(): Unit = registerView("cluster_nodes")
 
   override def close(): Unit = {
-    RunningJobsSource.runtimes.remove(runtimeId)
+    SnapshotSource.runtimes.remove(runtimeId)
     sweeper.shutdownNow()
     registry.values.asScala.toSeq.foreach(st => cleanup(st, JobStatus.Cancelled))
     spark.sparkContext.removeSparkListener(listener)

@@ -362,6 +362,32 @@ class GatewaySpec extends SparkSpec {
     }
   }
 
+  test("cluster_nodes view refreshes on scan: Terminating after beginShutdown") {
+    // The view used to bake a LocalRelation in at registration, so it kept
+    // reporting Available after the gateway began to drain.
+    withRuntime() { rt =>
+      rt.registerClusterNodesView()
+      rt.beginShutdown()
+      val status = spark.sql("SELECT status FROM cluster_nodes").collect()
+        .map(_.getString(0)).toSet
+      assert(status == Set("Terminating"), status)
+    }
+  }
+
+  test("snapshot views die with their runtime") {
+    val rt = new JobRuntime(spark)
+    rt.registerRunningJobsView()
+    rt.registerClusterNodesView()
+    val jobs = rt.runningJobs()
+    assert(spark.sql("SELECT count(*) FROM running_jobs").head().getLong(0) == 0L)
+    rt.close()
+    for (q <- Seq("SELECT * FROM running_jobs", "SELECT * FROM cluster_nodes")) {
+      val e = intercept[IllegalStateException](spark.sql(q).collect())
+      assert(e.getMessage.contains("is closed"), e.getMessage)
+    }
+    intercept[IllegalStateException](jobs.collect())
+  }
+
   test("cpu_intensive computes the reference's wrapping fibonacci") {
     assert(gateway.Udfs.fib(10) == 55L)
     assert(gateway.Udfs.fib(0) == 0L)

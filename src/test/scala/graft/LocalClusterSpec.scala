@@ -306,6 +306,30 @@ class LocalClusterSpec extends AnyFunSuite with BeforeAndAfterAll {
     } finally rt.close()
   }
 
+  test("refresh-on-scan snapshot views ship their partition to executor JVMs") {
+    // The snapped rows travel inside the scan's one input partition; here
+    // the count runs in a remote executor, so the partition is serialized
+    // to another JVM and read there.
+    val rt = new JobRuntime(cluster, GatewayConfig())
+    val metric = graft.pipeline.Dedup.GRID_METRIC_PREFIX + "lc_snapshot_site"
+    try {
+      rt.submit("SELECT 1 AS one", Map("name" -> "lc-probe"))
+      rt.registerRunningJobsView()
+      Sessions.recordGridDecision(metric,
+        pipeline.Dedup.GridDecision("lc_snapshot_site", 40, 1, "linear", None))
+      Sessions.recordGridDecision(metric,
+        pipeline.Dedup.GridDecision("lc_snapshot_site", 9000, 40, "saturated",
+          Some("switch strategy")))
+      rt.registerGridDecisionsView()
+      assert(cluster.sql("SELECT count(*) FROM running_jobs").head().getLong(0) == 1L)
+      assert(cluster.sql("""SELECT count(*) FROM grid_decisions
+        WHERE site = 'lc_snapshot_site'""").head().getLong(0) == 2L)
+    } finally {
+      Sessions.clearGridSite(metric)
+      rt.close()
+    }
+  }
+
   test("block-loss recompute guard holds when the lost block was remote") {
     val rt = new JobRuntime(cluster, GatewayConfig(fetchPageSize = 100))
     try {
