@@ -148,88 +148,78 @@ final class GatewayClient(
     (job, parts)
   }
 
-  /** Fetch one partition's rows (raw row-JSON lines), retrying transport
-    * failures with the reference's backoff discipline.
+  /** One partition fetched by `op` with the retry + RESUME discipline
+    * (VERDICT r14 design item): a mid-stream drop keeps the rows already
+    * received and re-issues the fetch with `"offset": <kept>`, so a
+    * multi-GB partition re-streams only the tail instead of the
+    * reference's whole-ticket re-stream. The header/ack line carries the
+    * partition's computation token, echoed as `"ctoken"` on a resume so the
+    * server can prove the resumed tail continues the SAME computation —
+    * without it, a cached-block loss between attempts could splice two row
+    * orders silently (ADVICE r15 high). A REJECTED resume (ok:false while
+    * an offset was sent — job evicted between attempts, offset past the end
+    * after a recompute, a token mismatch, or a server without offset
+    * support) falls back to one whole-ticket re-fetch with the partials
+    * discarded, the reference's original discipline.
     *
-    * Retries RESUME at the row boundary (VERDICT r14 design item): a
-    * mid-stream drop keeps the rows already received and re-issues the
-    * fetch with `"offset": <kept>`, so a multi-GB partition re-streams
-    * only the tail instead of the reference's whole-ticket re-stream.
-    * Two safety rails keep resumed results row-identical to a clean run:
-    *   - the last line buffered before a transport failure is DROPPED
-    *     before computing the offset — a connection killed MID-LINE hands
-    *     BufferedReader.readLine the truncated fragment as a final
-    *     "line"; every earlier line was proven newline-complete by the
-    *     line after it;
-    *   - a REJECTED resume (ok:false while an offset was sent — job
-    *     evicted between attempts, offset past the end after a
-    *     recompute, or a server without offset support) falls back to
-    *     one whole-ticket re-fetch with the partials discarded, the
-    *     reference's original discipline. */
-  def fetchPartition(jobId: String, partition: Int): Vector[String] = {
-    val what = s"fetch p$partition"
-    var acc = Vector.empty[String]
+    * `body` reads the response after its first line (given, null at EOF),
+    * hands each complete row to `keep` as it arrives, and returns the
+    * line that ends the response: the `{"ok": true, "rows": N}`
+    * terminator, an `ok:false` answer, or a fragment (a transport
+    * failure, retried). */
+  private def fetchResumable[A](op: String, jobId: String, partition: Int)(
+      body: (Conn, String, A => Unit) => String): Vector[A] = {
+    val what = s"$op p$partition"
+    var acc = Vector.empty[A]
     var resume = true
-    var attempt = 0
-    // Computation token of the stream `acc`'s rows came from (the fetch
-    // header carries it). Echoed as "ctoken" on an offset resume so the
-    // server can prove the resumed tail continues the SAME computation —
-    // without it, a cached-block loss between attempts could splice two
-    // row orders silently (ADVICE r15 high). Reset with acc on fallback.
     var ctoken: Option[String] = None
-    while (true) {
-      if (!resume) { acc = Vector.empty; ctoken = None }
-      val off = acc.size.toLong
-      var appended = 0
-      try {
-        if (conn == null) conn = connect()
-        val c = conn
+    var done = false
+    withRetry(what) { c =>
+      while (!done) {
+        if (!resume) { acc = Vector.empty; ctoken = None }
+        val off = acc.size.toLong
         val offField = if (off > 0) s""", "offset": $off""" else ""
         val ctField = ctoken.filter(_ => off > 0)
           .map(t => s""", "ctoken": ${jstr(t)}""").getOrElse("")
-        c.out.println(s"""{"op": "fetch", "job_id": ${jstr(jobId)}, """ +
+        c.out.println(s"""{"op": "$op", "job_id": ${jstr(jobId)}, """ +
           s""""partition": $partition$offField$ctField}""")
-        var line = c.readLine()
-        // Stream header: {"ok": true, "format": "rows", "token": "..."} —
-        // remember the token BEFORE any row arrives (a mid-stream drop
-        // never delivers the terminator, so the token must lead). A header
-        // fragment from a mid-header kill lacks the token field and falls
-        // through to the truncated-stream transport rail below.
-        if (line != null && line.contains("\"format\": \"rows\"")) {
-          """"token": "(-?\d+)"""".r.findFirstMatchIn(line)
-            .foreach(m => ctoken = Some(m.group(1)))
-          line = c.readLine()
-        }
-        while (line != null && line.startsWith("{\"row\"")) {
-          acc = acc :+ line
-          appended += 1
-          line = c.readLine()
-        }
-        if (line == null)
+        val head = c.readLine()
+        if (head != null && head.contains("\"format\": "))
+          """"token": "(-?\d+)"""".r.findFirstMatchIn(head).foreach(m => ctoken = Some(m.group(1)))
+        val end = body(c, head, a => acc :+= a)
+        if (end == null)
           throw new java.io.EOFException(s"$what: stream died before terminator")
-        if (line.contains("\"ok\": false")) {
+        if (end.contains("\"ok\": false")) {
           if (off > 0 && resume) resume = false // fall back, loop re-fetches whole
-          else throw new GatewayRequestException(s"$what rejected: $line")
-        } else if (!line.contains("\"ok\": true")) {
-          // Neither a row nor a parseable terminator: a mid-line kill's
-          // truncated fragment — a transport failure, not a server answer.
-          throw new java.io.EOFException(s"$what: truncated stream: $line")
-        } else {
-          return acc
-        }
-      } catch {
-        case e: java.io.IOException =>
-          dropConn()
-          if (appended > 0) acc = acc.init // last line may be truncated
-          if (attempt >= maxRetries)
-            throw new GatewayTransportException(
-              s"$what failed after ${attempt + 1} attempts", e)
-          sleeper(GatewayClient.backoffMs(attempt, jitterFrac()))
-          attempt += 1
+          else throw new GatewayRequestException(s"$what rejected: $end")
+        } else if (end.contains("\"ok\": true") && end.contains("\"rows\": ")) done = true
+        // A kill inside a control line hands the fragment as a "line": a
+        // transport failure, not a server answer.
+        else throw new java.io.EOFException(s"$what: truncated response: $end")
       }
+      acc
     }
-    throw new IllegalStateException("unreachable")
   }
+
+  /** Fetch one partition's rows (raw row-JSON lines), retrying transport
+    * failures with the reference's backoff discipline and resuming at the
+    * row boundary ([[fetchResumable]]). A row line is kept only once the
+    * line after it arrived: a connection killed MID-LINE hands readLine
+    * the truncated fragment as a final "line", so the last line before a
+    * transport failure is never kept. */
+  def fetchPartition(jobId: String, partition: Int): Vector[String] =
+    fetchResumable[String]("fetch", jobId, partition) { (c, head, keep) =>
+      // Stream header: {"ok": true, "format": "rows", "token": "..."}.
+      var line = if (head != null && head.contains("\"format\": \"rows\"")) c.readLine() else head
+      var last: String = null
+      while (line != null && line.startsWith("{\"row\"")) {
+        if (last != null) keep(last)
+        last = line
+        line = c.readLine()
+      }
+      if (last != null && line != null) keep(last)
+      line
+    }
 
   /** Submit + fetch every partition in ticket order. */
   def fetchAll(sql: String): Vector[String] = {
@@ -239,67 +229,24 @@ final class GatewayClient(
 
   /** Fetch one partition over the binary Arrow wire (the reference's
     * actual result encoding — LZ4 Arrow IPC), with the same retry +
-    * resume discipline as the text fetch. The resume unit is the RECORD
-    * BATCH: [[ArrowCodec.readResumable]] only exposes fully-decoded
-    * batches, so a mid-stream drop keeps their rows and re-fetches with
-    * `"offset": kept` — no mid-line truncation rail needed (batch decode
-    * is all-or-nothing, unlike text lines). A rejected resume falls back
-    * to one whole-ticket re-fetch, as in the text path. */
-  def fetchPartitionArrow(jobId: String, partition: Int): Vector[org.apache.spark.sql.Row] = {
-    val what = s"fetch_arrow p$partition"
-    var acc = Vector.empty[org.apache.spark.sql.Row]
-    var resume = true
-    var attempt = 0
-    // Same continuity echo as the text fetch: the ack's computation token
-    // rides back as "ctoken" on an offset resume (ADVICE r15 high).
-    var ctoken: Option[String] = None
-    while (true) {
-      if (!resume) { acc = Vector.empty; ctoken = None }
-      val off = acc.size.toLong
-      try {
-        if (conn == null) conn = connect()
-        val c = conn
-        val offField = if (off > 0) s""", "offset": $off""" else ""
-        val ctField = ctoken.filter(_ => off > 0)
-          .map(t => s""", "ctoken": ${jstr(t)}""").getOrElse("")
-        c.out.println(s"""{"op": "fetch_arrow", "job_id": ${jstr(jobId)}, """ +
-          s""""partition": $partition$offField$ctField}""")
-        val ack = c.readLine()
-        if (ack == null)
-          throw new java.io.EOFException(s"$what: no ack")
-        if (ack.contains("\"ok\": false")) {
-          if (off > 0 && resume) resume = false // fall back, loop re-fetches whole
-          else throw new GatewayRequestException(s"$what rejected: $ack")
-        } else if (!ack.contains("arrow_ipc_stream")) {
-          // A kill inside the ack hands the fragment as a "line".
-          throw new java.io.EOFException(s"$what: truncated ack: $ack")
-        } else {
-          """"token": "(-?\d+)"""".r.findFirstMatchIn(ack)
-            .foreach(m => ctoken = Some(m.group(1)))
-          val (_, rows, complete) = ArrowCodec.readResumable(c.raw)
-          acc = acc ++ rows
-          if (!complete)
-            throw new java.io.EOFException(s"$what: arrow stream died mid-batch")
-          val fin = c.readLine()
-          // Terminator lost after a complete body: the retry's offset
-          // equals the full row count, so it re-streams an EMPTY tail —
-          // convergent, nothing re-sent.
-          if (fin == null || !fin.contains("\"ok\": true"))
-            throw new java.io.EOFException(s"$what: truncated terminator: $fin")
-          return acc
-        }
-      } catch {
-        case e: java.io.IOException =>
-          dropConn()
-          if (attempt >= maxRetries)
-            throw new GatewayTransportException(
-              s"$what failed after ${attempt + 1} attempts", e)
-          sleeper(GatewayClient.backoffMs(attempt, jitterFrac()))
-          attempt += 1
+    * resume discipline as the text fetch ([[fetchResumable]]). The resume
+    * unit is the RECORD BATCH: [[ArrowCodec.readResumable]] only exposes
+    * fully-decoded batches, so a mid-stream drop keeps their rows and
+    * re-fetches with `"offset": kept` — no mid-line truncation rail needed
+    * (batch decode is all-or-nothing, unlike text lines). */
+  def fetchPartitionArrow(jobId: String, partition: Int): Vector[org.apache.spark.sql.Row] =
+    fetchResumable[org.apache.spark.sql.Row]("fetch_arrow", jobId, partition) { (c, ack, keep) =>
+      if (ack == null || !ack.contains("arrow_ipc_stream")) ack // an answer, or a fragment of the ack
+      else {
+        val (_, rows, complete) = ArrowCodec.readResumable(c.raw)
+        rows.foreach(keep)
+        if (!complete)
+          throw new java.io.EOFException(s"fetch_arrow p$partition: arrow stream died mid-batch")
+        // A terminator lost after a complete body: the retry's offset equals
+        // the full row count, so it re-streams an EMPTY tail — convergent.
+        c.readLine()
       }
     }
-    throw new IllegalStateException("unreachable")
-  }
 
   /** Submit + fetch every partition over the Arrow wire, in ticket order. */
   def fetchAllArrow(sql: String): Vector[org.apache.spark.sql.Row] = {

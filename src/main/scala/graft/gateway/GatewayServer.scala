@@ -7,6 +7,11 @@ import java.nio.charset.StandardCharsets
 import java.util.concurrent.{ConcurrentHashMap, Executors}
 import scala.util.control.NonFatal
 
+/** A fetch resume offset the partition cannot satisfy — answered as a
+  * protocol `ok:false` (the client falls back to a whole-ticket
+  * re-fetch); the job handle is deliberately NOT evicted. */
+final class FetchOffsetException(msg: String) extends RuntimeException(msg)
+
 /** Gateway credentials. The defaults are the reference app's hardcoded
   * integration-test pair (`integration-tests/app/src/main.rs:184-188`:
   * admin / admin123); production embeddings pass their own. `tokenTtl`
@@ -17,11 +22,6 @@ import scala.util.control.NonFatal
   * unauthenticated error as a bad password; the client re-handshakes.
   * `maxTokens` caps the issued-token map when no TTL would prune it:
   * past the cap, each handshake evicts the oldest live token. */
-/** A fetch resume offset the partition cannot satisfy — answered as a
-  * protocol `ok:false` (the client falls back to a whole-ticket
-  * re-fetch); the job handle is deliberately NOT evicted. */
-final class FetchOffsetException(msg: String) extends RuntimeException(msg)
-
 final case class GatewayAuth(user: String = "admin", password: String = "admin123",
     tokenTtl: Option[scala.concurrent.duration.FiniteDuration] = None,
     maxTokens: Int = 4096) {
@@ -58,17 +58,24 @@ final case class GatewayAuth(user: String = "admin", password: String = "admin12
   *       resumed tail come from the same computation — a mismatch answers
   *       ok:false and the client falls back to a whole-ticket re-fetch),
   *       then one {"row": [...]} line per row (from row K when an offset
-  *       is sent — the mid-stream-drop resume), then
-  *       {"ok": true, "rows": N} (text mode — the human/debug wire)
+  *       is sent — the mid-stream-drop resume; arrays as JSON arrays,
+  *       structs as arrays of their fields, maps as objects), then
+  *       {"ok": true, "rows": N} (text mode — the human/debug wire, decoded
+  *       from the same Arrow pages)
   *   {"op": "fetch_arrow", "job_id": "...", "partition": P[, "offset": K,
   *    "ctoken": "T"]}
   *       -> {"ok": true, "format": "arrow_ipc_stream", "token": "T"}\n,
   *       then one raw Arrow IPC stream (schema + one record batch per
-  *       ≤arrowBatchRows rows + EOS, self-delimiting) with LZ4_FRAME body
+  *       result page + EOS, self-delimiting) with LZ4_FRAME body
   *       compression: each buffer one lz4-java frame of independent 64 KB
   *       blocks, decodable by any LZ4_FRAME Arrow reader (commons-compress
   *       included), then {"ok": true, "rows": N} — the reference's result
   *       wire (LZ4 Arrow FlightData, `networks/tonic/src/server.rs:109-141`).
+  *       A batch IS a page: ≤ `fetchPageSize` rows ([[GatewayConfig]]),
+  *       encoded on the executor that computed it and written as cached;
+  *       the server encodes nothing, except the first page of a resume
+  *       whose offset falls inside it, which it re-encodes without the
+  *       rows the client already holds.
   *       A failure after the ack line (encode error, mid-stream partition
   *       recompute) closes the connection instead of answering: the client
   *       is reading raw Arrow bytes, sees a truncated stream, and takes its
@@ -92,6 +99,10 @@ final case class GatewayAuth(user: String = "admin", password: String = "admin12
   * The accept loop and per-connection handlers run on daemon threads
   * (driver-side control plane only — row data streams straight from the
   * per-partition runJob results, never accumulating beyond one partition).
+  *
+  * `arrowBatchRows` is kept for source compatibility and no longer read:
+  * the Arrow record batches are the runtime's result pages, whose size is
+  * `GatewayConfig.fetchPageSize`.
   */
 final class GatewayServer(runtime: JobRuntime, port: Int = 0,
     arrowBatchRows: Int = 4096,
@@ -131,6 +142,9 @@ final class GatewayServer(runtime: JobRuntime, port: Int = 0,
     case t: java.sql.Timestamp => jstr(t.toString)
     case d: java.sql.Date => jstr(d.toString)
     case seq: scala.collection.Seq[_] => seq.map(jval).mkString("[", ",", "]")
+    case row: org.apache.spark.sql.Row => jval(row.toSeq)
+    case m: scala.collection.Map[_, _] =>
+      m.map { case (k, x) => jstr(String.valueOf(k)) + ":" + jval(x) }.mkString("{", ",", "}")
     case other => jstr(String.valueOf(other))
   }
 
@@ -305,13 +319,17 @@ final class GatewayServer(runtime: JobRuntime, port: Int = 0,
     else { condemnedHandles.put(jobId, System.currentTimeMillis() + grace); () }
   }
 
-  /** Drop handles whose grace deadline passed — piggybacked on every
-    * dispatch (a live gateway drains the queue with its own traffic) AND
-    * run by [[graceSweeper]] so a gateway that goes QUIET still frees
-    * what a condemned handle pins (the JobState and its analyzed plan;
-    * the executed plan and pages were already released at runtime
-    * cleanup). */
+  /** Drop handles whose grace deadline passed, and start the clock on
+    * handles whose job the runtime ended on its own (never fetched, TTL)
+    * — piggybacked on every dispatch (a live gateway drains the queue with
+    * its own traffic) AND run by [[graceSweeper]] so a gateway that goes
+    * QUIET still frees what a condemned handle pins (the JobState and its
+    * analyzed plan; the executed plan and pages were already released at
+    * runtime cleanup). */
   private def sweepHandles(): Unit = {
+    handles.foreach { case (id, h) =>
+      if (terminal(h) && !condemnedHandles.containsKey(id)) condemnHandle(id)
+    }
     val now = System.currentTimeMillis()
     val it = condemnedHandles.entrySet().iterator()
     while (it.hasNext) {
@@ -325,18 +343,21 @@ final class GatewayServer(runtime: JobRuntime, port: Int = 0,
     * since any probe op would itself sweep). */
   def pinnedHandles: Int = handles.size
 
-  private val graceSweeper: Option[java.util.concurrent.ScheduledExecutorService] =
-    if (handleGraceMs <= 0L) None
-    else {
-      val ex = Executors.newSingleThreadScheduledExecutor(r => {
-        val t = new Thread(r, "graft-gateway-grace-sweeper")
-        t.setDaemon(true); t
-      })
-      val period = math.max(100L, handleGraceMs / 2)
-      ex.scheduleWithFixedDelay(() => sweepHandles(), period, period,
-        java.util.concurrent.TimeUnit.MILLISECONDS)
-      Some(ex)
-    }
+  private def terminal(h: JobHandle): Boolean = h.status match {
+    case JobStatus.Completed | JobStatus.Cancelled | JobStatus.Failed(_) => true
+    case _ => false
+  }
+
+  private val graceSweeper = {
+    val ex = Executors.newSingleThreadScheduledExecutor(r => {
+      val t = new Thread(r, "graft-gateway-grace-sweeper")
+      t.setDaemon(true); t
+    })
+    val period = math.max(100L, handleGraceMs / 2)
+    ex.scheduleWithFixedDelay(() => sweepHandles(), period, period,
+      java.util.concurrent.TimeUnit.MILLISECONDS)
+    ex
+  }
 
   private def streamRows(rows: Iterator[org.apache.spark.sql.Row], out: PrintWriter): Long = {
     var n = 0L
@@ -354,39 +375,45 @@ final class GatewayServer(runtime: JobRuntime, port: Int = 0,
         val sql = field(line, "sql").getOrElse(
           throw new IllegalArgumentException("submit requires sql"))
         val h = runtime.submit(sql)
+        // A job whose planning throws is never handed out: cancel it.
+        val parts = try h.tickets.size catch { case NonFatal(e) => h.cancel(); throw e }
         handles.put(h.jobId, h)
         val cols = h.schema.fieldNames.toSeq
         out.println(s"""{"ok": true, "job_id": ${jstr(h.jobId)}, """ +
-          s""""partitions": ${h.tickets.size}, "columns": ${jval(cols)}}""")
-      case Some("fetch") =>
+          s""""partitions": $parts, "columns": ${jval(cols)}}""")
+      case Some(op @ ("fetch" | "fetch_arrow")) =>
         val jobId = field(line, "job_id").getOrElse(
-          throw new IllegalArgumentException("fetch requires job_id"))
+          throw new IllegalArgumentException(s"$op requires job_id"))
         val p = field(line, "partition").getOrElse("0").toInt
         // Resume offset (100-TB hardening over the reference's whole-task
         // re-fetch, runtime.rs:499-525): a retry after a mid-stream drop
         // asks for rows FROM `offset`, so a multi-GB partition re-streams
-        // only the tail. The ticket re-executes either way (that is the
-        // reference's discipline); what the offset saves is the WIRE. Row
-        // order is stable per computation token — the stream pages over
-        // the cached final stage and throws PartitionRecomputeException on
-        // a token/boundary mismatch — so skip-k resumes exactly where the
-        // dropped stream stopped.
+        // only the tail. What the offset saves is the WIRE and the page
+        // jobs: the stream skips whole pages by their row counts and cuts
+        // the first page it sends at the offset. Row order is stable per
+        // computation token — the stream pages over the cached final stage
+        // and throws PartitionRecomputeException on a token mismatch — so
+        // the tail starts exactly where the dropped stream stopped.
         val off = field(line, "offset").map(_.toLong).getOrElse(0L)
         val ctoken = field(line, "ctoken")
         val h = handles.getOrElse(jobId,
           throw new IllegalStateException(s"unknown job $jobId"))
-        // Bounded streaming: rows go from ≤fetchPageSize-row pages through
-        // the connection buffer to the socket. A slow client backpressures
-        // the page producer via blocking TCP writes once the buffer fills —
-        // the reference's bounded-channel semantics
-        // (dist/src/runtime.rs:253-303) end to end.
-        val n = {
-          val stream = h.fetchStream(Ticket(jobId, p))
+        // Bounded streaming: ≤fetchPageSize-row pages go through the
+        // connection buffer to the socket — as the cached Arrow bytes, or
+        // decoded to row lines. A slow client backpressures the page
+        // producer via blocking TCP writes once the buffer fills — the
+        // reference's bounded-channel semantics (dist/src/runtime.rs:253-303)
+        // end to end. The server holds at most one page in hand, the
+        // stream's queue and the connection buffer.
+        val stream = h.fetchStream(Ticket(jobId, p), off)
+        var acked = false
+        val n =
           try {
-            // Force the first page job: stamps the computation token the
-            // header carries and the resume-continuity check compares.
-            stream.hasNext
-            val tok = stream.computationToken
+            // Wait for the first page before the ack/header: it stamps the
+            // token they carry, and a continuity or offset failure still
+            // answers a clean JSON ok:false (an Arrow client has not
+            // switched to raw bytes yet).
+            val tok = stream.start()
             // Continuity (ADVICE r15 high): an offset resume must splice
             // onto the SAME computation the client's kept prefix came from
             // — recomputed row order is not guaranteed identical, so a
@@ -397,95 +424,28 @@ final class GatewayServer(runtime: JobRuntime, port: Int = 0,
                 s"computation token mismatch (kept ${ctoken.get}, current " +
                   s"$tok): the partition was recomputed since the dropped " +
                   "stream; re-fetch the whole ticket")
-            var skipped = 0L
-            while (skipped < off && stream.hasNext) { stream.next(); skipped += 1 }
-            if (skipped < off)
-              // A served answer, not a failure: the client falls back to a
-              // whole-ticket re-fetch. The handle stays live for it.
-              throw new FetchOffsetException(
-                s"offset $off beyond partition end ($skipped rows)")
-            out.println(s"""{"ok": true, "format": "rows", """ +
-              s""""token": ${jstr(tok.toString)}}""")
-            streamRows(stream, out)
-          }
-          catch {
-            case e: FetchOffsetException => throw e
-            // Recoverable by contract: the ticket stays re-fetchable (a
-            // fresh stream re-reads the partition self-consistently), so
-            // the handle must survive for that re-fetch (ADVICE r15).
-            case e: PartitionRecomputeException => throw e
-            case e: Throwable => handles.remove(jobId); throw e
-          }
-          finally stream.close()
-        }
-        // Evict once the job reaches a terminal state (all partitions
-        // delivered → runtime cleaned up) — through the GRACE window:
-        // the handle map and the DataFrame/RDD it pins stay bounded in a
-        // long-lived gateway, but a client whose stream died into the
-        // TCP void can still re-fetch the ticket meanwhile.
-        h.status match {
-          case JobStatus.Completed | JobStatus.Cancelled | JobStatus.Failed(_) =>
-            condemnHandle(jobId)
-          case _ => ()
-        }
-        out.println(s"""{"ok": true, "rows": $n}""")
-      case Some("fetch_arrow") =>
-        val jobId = field(line, "job_id").getOrElse(
-          throw new IllegalArgumentException("fetch_arrow requires job_id"))
-        val p = field(line, "partition").getOrElse("0").toInt
-        // Same resume-offset contract as the text fetch: the ticket
-        // re-executes, the wire re-streams only rows FROM `offset`. The
-        // skip runs BEFORE the ack so an unsatisfiable offset answers a
-        // clean protocol `ok:false` (after the ack the client is reading
-        // raw Arrow bytes and a JSON error line would desync it).
-        val off = field(line, "offset").map(_.toLong).getOrElse(0L)
-        val ctoken = field(line, "ctoken")
-        val h = handles.getOrElse(jobId,
-          throw new IllegalStateException(s"unknown job $jobId"))
-        // Validate convertibility BEFORE the ack: once the ack line is out,
-        // the client switches to reading raw Arrow bytes, so a late
-        // conversion failure (array/struct/map columns) would desync the
-        // protocol. Failing here answers with a clean JSON error and the
-        // client can fall back to text fetch.
-        ArrowCodec.toArrowSchema(h.schema)
-        // Binary result wire: ack line, then a self-delimiting Arrow IPC
-        // stream fed page-by-page from the bounded fetch, every buffer an
-        // lz4-java frame of independent 64 KB blocks (Lz4FrameCodec) — at
-        // no point does the server hold more than one page + one encoded
-        // batch + the connection buffer.
-        val stream = h.fetchStream(Ticket(jobId, p))
-        var acked = false
-        val n =
-          try {
-            // Force the first page job before the ack: stamps the token the
-            // ack carries; a continuity or offset failure still answers a
-            // clean JSON ok:false (the client has not switched to raw
-            // Arrow bytes yet).
-            stream.hasNext
-            val tok = stream.computationToken
-            if (off > 0 && ctoken.exists(_ != tok.toString))
-              throw new FetchOffsetException(
-                s"computation token mismatch (kept ${ctoken.get}, current " +
-                  s"$tok): the partition was recomputed since the dropped " +
-                  "stream; re-fetch the whole ticket")
-            var skipped = 0L
-            while (skipped < off && stream.hasNext) { stream.next(); skipped += 1 }
-            if (skipped < off)
-              throw new FetchOffsetException(
-                s"offset $off beyond partition end ($skipped rows)")
-            // Straight into the connection buffer, ahead of the Arrow bytes
-            // (nothing of this response is pending in `out`).
-            raw.write((s"""{"ok": true, "format": "arrow_ipc_stream", """ +
-              s""""token": ${jstr(tok.toString)}}\n""").getBytes(StandardCharsets.UTF_8))
-            acked = true
-            ArrowCodec.write(h.schema, stream, raw, arrowBatchRows)
+            if (op == "fetch") {
+              out.println(s"""{"ok": true, "format": "rows", """ +
+                s""""token": ${jstr(tok.toString)}}""")
+              streamRows(stream, out)
+            } else {
+              // Straight into the connection buffer, ahead of the Arrow
+              // bytes (nothing of this response is pending in `out`).
+              raw.write((s"""{"ok": true, "format": "arrow_ipc_stream", """ +
+                s""""token": ${jstr(tok.toString)}}\n""").getBytes(StandardCharsets.UTF_8))
+              acked = true
+              var rows = 0L
+              ArrowCodec.writeStream(h.schema, Iterator.continually(stream.nextPage())
+                .takeWhile(_ != null).map { page => rows += page.rows; page.bytes }, raw)
+              rows
+            }
           } catch {
             case e: Throwable =>
               // The handle survives for the client's fallback after a
               // rejected offset, a partition recompute (recoverable by
               // contract, ADVICE r15) or a dead socket (raw-stream writes
-              // DO throw on one: transport loss, same rule as the text
-              // path); any other failure evicts it.
+              // DO throw on one: transport loss); any other failure
+              // evicts it.
               e match {
                 case _: FetchOffsetException | _: PartitionRecomputeException |
                     _: java.io.IOException => ()
@@ -498,11 +458,12 @@ final class GatewayServer(runtime: JobRuntime, port: Int = 0,
               throw (if (acked) new StreamAbortedException(e) else e)
           }
           finally stream.close()
-        h.status match {
-          case JobStatus.Completed | JobStatus.Cancelled | JobStatus.Failed(_) =>
-            condemnHandle(jobId)
-          case _ => ()
-        }
+        // Evict once the job reaches a terminal state (all partitions
+        // delivered → runtime cleaned up) — through the GRACE window:
+        // the handle map and the DataFrame/RDD it pins stay bounded in a
+        // long-lived gateway, but a client whose stream died into the
+        // TCP void can still re-fetch the ticket meanwhile.
+        if (terminal(h)) condemnHandle(jobId)
         out.println(s"""{"ok": true, "rows": $n}""")
       case Some(view @ ("running_jobs" | "cluster_nodes" | "store_occupancy")) =>
         val n = streamRows(runtime.snapshot(view).collect().iterator, out)
@@ -524,7 +485,7 @@ final class GatewayServer(runtime: JobRuntime, port: Int = 0,
   override def close(): Unit = {
     closed = true
     try server.close() catch { case NonFatal(_) => () }
-    graceSweeper.foreach(_.shutdownNow())
+    graceSweeper.shutdownNow()
     pool.shutdownNow()
   }
 }

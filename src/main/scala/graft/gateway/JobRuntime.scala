@@ -6,6 +6,7 @@ import scala.collection.concurrent.TrieMap
 import scala.concurrent.duration._
 import scala.jdk.CollectionConverters._
 
+import org.apache.spark.TaskContext
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerStageCompleted, JobSucceeded}
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, Encoders, Row, SparkSession}
@@ -32,8 +33,9 @@ object JobStatus {
 /** Lifecycle knobs — names and defaults from `dist/src/config.rs:12-22`
   * (job_ttl 30 min, ttl check 5 min, stage-0 poll timeout 10 s). Tests dial
   * these down like the reference app does (`app/src/main.rs:53-55`).
-  * `fetchPageSize` bounds how many rows of a result partition ever sit on
-  * the driver at once during a ticket fetch (the analog of the reference's
+  * `fetchPageSize` bounds the rows of one result page — one Arrow record
+  * batch — and so how many rows of a result partition ever sit on the
+  * driver at once during a ticket fetch (the analog of the reference's
   * Arrow batch size feeding its capacity-2 result channel,
   * `dist/src/runtime.rs:253-303`). */
 final case class GatewayConfig(
@@ -46,6 +48,11 @@ final case class GatewayConfig(
   * analog of the reference's stage-0 `TaskId` tickets
   * (`integration-tests/app/src/main.rs:296-330`). */
 final case class Ticket(jobId: String, partition: Int)
+
+/** One cached result page: `rows` rows as one LZ4_FRAME Arrow IPC
+  * record-batch message ([[ArrowCodec.encodePages]]), stamped with the
+  * computation token of the partition materialization that built it. */
+private[gateway] final case class ResultPage(token: Long, rows: Int, bytes: Array[Byte])
 
 /** One job's registry entry. The job is fixed at submit by its logical
   * plan (for a command, the plan over its already-produced output rows):
@@ -83,32 +90,31 @@ private[gateway] final class JobState(
   // Spark-side execution bookkeeping for the stages JSON (listener-fed).
   val sparkJobs = new TrieMap[Int, String]()   // spark job id -> state
   val sparkStages = new TrieMap[Int, (Int, String)]() // stage id -> (numTasks, state)
-  // The final stage, materialized ONCE per partition as pre-built pages of
-  // ≤ pageSize rows and cached (reference TaskSet reuse, runtime.rs:499-525;
-  // its stream never re-scans a partition, runtime.rs:253-303). Page k is
-  // then `iterator.drop(k).next()` — k array *references* skipped, not
-  // k·pageSize rows re-deserialized, so draining P pages costs O(P) page
-  // touches instead of the O(P²·pageSize) row-touches a per-page
-  // `it.slice(lo, hi)` would cost. Each cached element carries a
-  // computation token (nanoTime stamped when the partition materializes):
-  // if a cached block is lost and recomputed, the token changes and the
-  // in-flight stream fails loudly instead of silently crossing page
-  // boundaries of two different row orders (post-shuffle recompute order
-  // is not guaranteed stable).
-  private var pagesV: RDD[(Long, Array[Row])] = null
-  def pages: RDD[(Long, Array[Row])] = synchronized {
-    if (pagesV == null) {
-      val ps = pageSize
-      pagesV = df.rdd.mapPartitions({ it =>
-        val token = System.nanoTime()
-        it.grouped(ps).map(g => (token, g.toArray))
-      }, preservesPartitioning = true)
-      pagesV.persist(StorageLevel.MEMORY_AND_DISK)
-    }
+
+  /** Run `body` on this thread under the job's group and the `graft-jobs`
+    * FAIR pool (cancellation, TTL and listener correlation; gateway work
+    * never starves other pools' health queries), then restore the thread's
+    * own properties. Everything that can run a Spark job for this job goes
+    * through here: planning (which, under AQE, runs the upstream shuffle
+    * stages) as much as the page jobs. */
+  def underJob[A](body: => A): A = {
+    val sc = session.sparkContext
+    val saved = Seq("spark.jobGroup.id", "spark.job.description", "spark.job.interruptOnCancel",
+      "spark.scheduler.pool").map(k => k -> sc.getLocalProperty(k))
+    sc.setJobGroup(jobId, s"graft job $jobId", interruptOnCancel = true)
+    sc.setLocalProperty("spark.scheduler.pool", "graft-jobs")
+    try body finally saved.foreach { case (k, v) => sc.setLocalProperty(k, v) }
+  }
+
+  private var pagesV: ResultPages = null
+  /** The final stage as cached result pages — planned on first use, under
+    * the job ([[underJob]]). */
+  def pages: ResultPages = synchronized {
+    if (pagesV == null) pagesV = underJob(new ResultPages(df, pageSize))
     pagesV
   }
   /** Fixed by the first materialization: the ticket count clients hold. */
-  lazy val numPartitions: Int = pages.getNumPartitions
+  lazy val numPartitions: Int = pages.rdd.getNumPartitions
 
   /** Keep only what a grace re-fetch needs once the job is terminal: the
     * [[schema]] and the logical [[plan]]. The executed QueryExecution and
@@ -122,12 +128,77 @@ private[gateway] final class JobState(
     * rebuilds the pages, which the recompute already required. */
   def release(): Unit = synchronized {
     if (pagesV != null) {
-      try pagesV.unpersist(blocking = false) catch { case _: Throwable => () }
+      try pagesV.rdd.unpersist(blocking = false) catch { case _: Throwable => () }
       pagesV = null
     }
     dfV = null
   }
   val completion = new CountDownLatch(1)
+}
+
+/** One materialization of a job's result: its final stage
+  * (`queryExecution.toRdd`, so the job is planned once and no row becomes
+  * an external `Row` on the way) as cached [[ResultPage]]s of
+  * ≤ `pageSize` rows each, built and compressed by the task that computes
+  * the partition (reference TaskSet reuse, runtime.rs:499-525; its stream
+  * never re-scans a partition, runtime.rs:253-303).
+  *
+  * The first fetch of any ticket runs ONE job over every partition
+  * ([[layout]]): each task caches its pages and returns only its
+  * computation token and page row counts, plus — for the partition that
+  * fetch asked for — its first page. From then on an empty partition
+  * needs no job, and page k of a partition is one narrow job that skips
+  * k cached page references (`iterator.drop(k)`), never re-touching a row.
+  * The token (nanoTime when the task starts) changes whenever a lost block
+  * is recomputed, which is how a stream notices that its next page comes
+  * from another computation (post-shuffle recompute order is not
+  * guaranteed stable). */
+private[gateway] final class ResultPages(df: DataFrame, pageSize: Int) {
+  val rdd: RDD[ResultPage] = {
+    val (schema, rows) = (df.schema, pageSize)
+    ArrowCodec.toArrowSchema(schema) // refuse, here on the driver, a type pages cannot carry
+    df.queryExecution.toRdd.mapPartitions({ it =>
+      val token = System.nanoTime()
+      ArrowCodec.encodePages(schema, it, rows).map { case (n, page) => ResultPage(token, n, page) }
+    }, preservesPartitioning = true).persist(StorageLevel.MEMORY_AND_DISK)
+  }
+
+  // partition -> (token, page row counts), set by the one layout job, and
+  // the first page that job brought back for the partition it was run for.
+  private var layoutV: Array[(Long, Array[Int])] = null
+  private var firstPage: (Int, ResultPage) = null
+
+  /** Partition `p`'s (token, page row counts, first page if this call
+    * hands it over, else null). The first call runs the layout job, on the
+    * calling thread, so under the caller's job group. */
+  def layout(p: Int): (Long, Array[Int], ResultPage) = synchronized {
+    if (layoutV == null) {
+      val got = rdd.sparkContext.runJob(rdd, (ctx: TaskContext, it: Iterator[ResultPage]) => {
+        var token = -1L
+        val rows = Array.newBuilder[Int]
+        var first: ResultPage = null
+        it.foreach { pg =>
+          if (first == null && ctx.partitionId() == p) first = pg
+          token = pg.token
+          rows += pg.rows
+        }
+        (token, rows.result(), first)
+      })
+      layoutV = got.map(g => (g._1, g._2))
+      firstPage = (p, got(p)._3)
+    }
+    val handed = if (firstPage != null && firstPage._1 == p) firstPage._2 else null
+    if (handed != null) firstPage = null
+    (layoutV(p)._1, layoutV(p)._2, handed)
+  }
+
+  /** Page k of partition p from the cache, in one job; null when the
+    * partition now has k pages or fewer (a recompute changed it). */
+  def page(p: Int, k: Int): ResultPage =
+    rdd.sparkContext.runJob(rdd, (it: Iterator[ResultPage]) => {
+      val rest = it.drop(k)
+      if (rest.hasNext) rest.next() else null
+    }, Seq(p)).head
 }
 
 /** A page job observed a different computation of the cached result
@@ -145,13 +216,15 @@ final class JobHandle private[gateway] (runtime: JobRuntime, state: JobState) {
   def jobId: String = state.jobId
   def schema: StructType = state.schema
   def status: JobStatus = state.status
-  /** One ticket per final-stage partition (lifecycle step 5 in SURVEY §3.1). */
+  /** One ticket per final-stage partition (lifecycle step 5 in SURVEY §3.1).
+    * Plans the job under its group and pool; under AQE that runs the
+    * upstream shuffle stages. */
   def tickets: Seq[Ticket] =
     (0 until state.numPartitions).map(Ticket(state.jobId, _))
   /** Materialize one partition's rows (convenience over [[fetchStream]] —
     * the caller chooses to hold the whole partition). Re-fetching a ticket
-    * re-reads the cached pre-paged stage — same semantics as the
-    * reference's fresh-TaskSet re-execution. */
+    * re-reads the cached pages — same semantics as the reference's
+    * fresh-TaskSet re-execution. */
   def fetch(ticket: Ticket): Seq[Row] = runtime.fetch(state, ticket.partition)
   /** Test hook: the Dataset the job holds now, if any. A released job
     * holds none; its grace re-fetch rebuilds one from the logical plan. */
@@ -160,8 +233,8 @@ final class JobHandle private[gateway] (runtime: JobRuntime, state: JobState) {
     * cached blocks to memory pressure / executor loss — the next page job
     * recomputes the partition and re-caches it under a new token). */
   private[graft] def simulateBlockLoss(): Unit = {
-    state.pages.unpersist(blocking = true)
-    state.pages.persist(StorageLevel.MEMORY_AND_DISK)
+    state.pages.rdd.unpersist(blocking = true)
+    state.pages.rdd.persist(StorageLevel.MEMORY_AND_DISK)
     ()
   }
   /** Stream one partition's rows through bounded pages: at most
@@ -170,7 +243,11 @@ final class JobHandle private[gateway] (runtime: JobRuntime, state: JobState) {
     * capacity-2 Arrow batch channel (`dist/src/runtime.rs:253-303`).
     * Close early to abandon the stream (remaining page jobs stop). */
   def fetchStream(ticket: Ticket): PartitionRowStream =
-    runtime.rowStream(state, ticket.partition)
+    runtime.rowStream(state, ticket.partition, 0L)
+  /** [[fetchStream]] from row `fromRow` of the partition (an offset
+    * resume): pages before it are skipped by their row counts. */
+  private[gateway] def fetchStream(ticket: Ticket, fromRow: Long): PartitionRowStream =
+    runtime.rowStream(state, ticket.partition, fromRow)
   /** Drain every ticket in partition order. */
   def fetchAll(): Seq[Row] = tickets.flatMap(fetch)
   /** Peak rows any single fetch page held on the driver for this job. */
@@ -180,26 +257,30 @@ final class JobHandle private[gateway] (runtime: JobRuntime, state: JobState) {
     state.completion.await(timeout.toMillis, TimeUnit.MILLISECONDS)
 }
 
-/** A pull-backpressured row stream over one result partition.
+/** A pull-backpressured stream over one result partition, from row
+  * `fromRow`: pages for the gateway's Arrow wire ([[nextPage]]), rows for
+  * everyone else (each page decoded as it is reached — the one page
+  * format serves both).
   *
-  * A producer thread issues one narrow page job at a time against the
-  * cached pre-paged final stage (page k = `it.drop(k).next()`, k array
-  * references skipped) and hands pages to the consumer through a
-  * capacity-2 bounded queue — the direct Spark analog of the reference
-  * streaming a partition as Arrow batches through a capacity-2 channel
-  * (`dist/src/runtime.rs:253-303`, `networks/tonic/src/server.rs:109-141`).
-  * The driver therefore never holds more than ~3 pages of the partition
-  * regardless of partition size; a slow consumer blocks the producer
-  * (backpressure), not memory; and total per-partition work is one
-  * materializing pass plus O(pages²) array-reference skips — no row is
-  * deserialized twice.
+  * A producer thread, under the job's group and pool, takes the
+  * partition's layout from [[ResultPages.layout]] (running the job's one
+  * layout job if no fetch has yet), then issues one narrow page job at a
+  * time for the pages it still needs and hands them to the consumer
+  * through a capacity-2 bounded queue — the direct Spark analog of the
+  * reference streaming a partition as Arrow batches through a capacity-2
+  * channel (`dist/src/runtime.rs:253-303`,
+  * `networks/tonic/src/server.rs:109-141`). The driver therefore never
+  * holds more than ~3 pages of the partition regardless of partition size,
+  * and a slow consumer blocks the producer (backpressure), not memory. An
+  * empty partition, or a first page that rode back with the layout job,
+  * costs no page job.
   *
-  * Every page job also returns the partition's computation token and the
-  * boundary row (last row of page k-1, an O(1) array access on the cached
-  * page): a token or boundary mismatch against what this stream already
-  * delivered means the cached block was lost and recomputed — the stream
-  * throws [[PartitionRecomputeException]] rather than risk duplicating or
-  * dropping rows across the boundary, and the ticket stays re-fetchable.
+  * Every page carries the partition's computation token: a page whose
+  * token differs from this stream's first page means the cached block was
+  * lost and recomputed — the stream throws [[PartitionRecomputeException]]
+  * rather than risk duplicating or dropping rows across the boundary, and
+  * the ticket stays re-fetchable. An offset past the partition's end
+  * throws [[FetchOffsetException]] at the first pull.
   *
   * Draining the stream marks the ticket delivered (completion bookkeeping
   * identical to a materialized fetch); a failed page job fails the job.
@@ -208,7 +289,7 @@ final class PartitionRowStream private[gateway] (
     runtime: JobRuntime,
     st: JobState,
     partition: Int,
-    pageSize: Int)
+    fromRow: Long)
   extends Iterator[Row] with AutoCloseable {
 
   private val queue =
@@ -218,116 +299,110 @@ final class PartitionRowStream private[gateway] (
   private final case class Err(e: Throwable)
 
   /** The partition's computation token as stamped by this stream's FIRST
-    * page job ([[PartitionRowStream.NO_TOKEN]] until that job returns; -1
-    * for an empty partition — no page ever materialized to stamp one).
-    * The gateway returns it to the client on the fetch header/ack and
-    * compares the echo on an offset resume: a mismatch means the client's
-    * kept prefix and this stream's tail come from DIFFERENT computations
-    * (recomputed row order is not guaranteed identical), so skip-K would
-    * silently splice two orderings (ADVICE r15 high). */
+    * page ([[PartitionRowStream.NO_TOKEN]] until it is in hand; the layout
+    * token when the stream needs no page — -1 for an empty partition, no
+    * page ever materialized to stamp one). The gateway returns it to the
+    * client on the fetch header/ack and compares the echo on an offset
+    * resume: a mismatch means the client's kept prefix and this stream's
+    * tail come from DIFFERENT computations (recomputed row order is not
+    * guaranteed identical), so skip-K would silently splice two orderings
+    * (ADVICE r15 high). */
   @volatile private var streamTokenV: Long = PartitionRowStream.NO_TOKEN
-  private[gateway] def computationToken: Long = streamTokenV
 
   private def offer(x: AnyRef): Unit = {
     while (!stopped && !queue.offer(x, 100, TimeUnit.MILLISECONDS)) {}
   }
 
+  private def recomputed(detail: String) = new PartitionRecomputeException(
+    s"result partition $partition of job ${st.jobId} was recomputed $detail; " +
+      "refusing to deliver inconsistent rows — re-fetch the ticket")
+
   private val producer = new Thread(() => {
-    val sc = runtime.spark.sparkContext
-    sc.setJobGroup(st.jobId,
-      s"graft job ${st.jobId} partition $partition", interruptOnCancel = true)
-    sc.setLocalProperty("spark.scheduler.pool", "graft-jobs")
-    try {
-      val pages = st.pages // one lineage per stream, even if the job is released
+    try st.underJob {
+      val pages = st.pages // one materialization per stream, even if the job is released
+      val (layoutToken, counts, handed) = pages.layout(partition)
+      val total = counts.foldLeft(0L)(_ + _)
+      if (fromRow > total)
+        throw new FetchOffsetException(s"offset $fromRow beyond partition end ($total rows)")
+      // The page holding row `fromRow`; the pages before it are skipped
+      // by their counts, never fetched.
       var k = 0
-      var last = false
-      var streamToken = -1L   // stamped by the first page job of this stream
-      var lastDelivered: Row = null // last row of the page the consumer got
-      while (!stopped && !last) {
-        val pageIdx = k
-        // Skip k cached page *arrays* (O(k) references), remembering the
-        // boundary row of page k-1 and the partition's computation token.
-        val (token, skipped, boundary, page) = sc.runJob(pages,
-          (it: Iterator[(Long, Array[Row])]) => {
-            var tok = -1L
-            var bnd: Row = null
-            var i = 0
-            while (i < pageIdx && it.hasNext) {
-              val (t, arr) = it.next(); tok = t; bnd = arr(arr.length - 1); i += 1
-            }
-            val pg: Array[Row] =
-              if (i == pageIdx && it.hasNext) { val (t, arr) = it.next(); tok = t; arr }
-              else Array.empty[Row]
-            (tok, i, bnd, pg)
-          },
-          Seq(partition)).head
-        if (skipped != pageIdx)
-          throw new PartitionRecomputeException(
-            s"result partition $partition of job ${st.jobId} was recomputed " +
-              s"with fewer pages ($skipped) than already streamed ($pageIdx); " +
-              "refusing to deliver inconsistent rows — re-fetch the ticket")
-        if (pageIdx == 0) { streamToken = token; streamTokenV = token }
-        else if (token != streamToken || (lastDelivered != null && boundary != lastDelivered))
-          throw new PartitionRecomputeException(
-            s"result partition $partition of job ${st.jobId} was recomputed " +
-              "mid-stream (cached block lost); page boundaries of the new " +
-              "computation may not line up — re-fetch the ticket")
-        last = page.length < pageSize
+      var before = 0L
+      while (k < counts.length && before + counts(k) <= fromRow) { before += counts(k); k += 1 }
+      val first = k
+      if (first == counts.length) streamTokenV = layoutToken
+      while (!stopped && k < counts.length) {
+        val page = if (k == 0 && handed != null) handed else pages.page(partition, k)
+        if (page == null) throw recomputed(s"with fewer pages than the ${k + 1} it had")
+        if (k == first) streamTokenV = page.token
+        else if (page.token != streamTokenV)
+          throw recomputed("mid-stream (cached block lost); page boundaries of the new " +
+            "computation may not line up")
+        st.maxPageRows.updateAndGet(m => math.max(m, page.rows.toLong))
+        val skip = (fromRow - before).toInt
+        offer(if (k > first || skip == 0) page
+          else ResultPage(page.token, page.rows - skip, ArrowCodec.dropRows(st.schema, page.bytes, skip)))
         k += 1
-        st.maxPageRows.updateAndGet(m => math.max(m, page.length.toLong))
-        if (page.nonEmpty) {
-          lastDelivered = page(page.length - 1)
-          offer(page)
-        }
       }
       if (!stopped) offer(End)
     } catch {
       case e: Throwable => offer(Err(e))
-    } finally {
-      sc.setLocalProperty("spark.scheduler.pool", null)
-      sc.clearJobGroup()
     }
   }, s"graft-fetch-${st.jobId}-p$partition")
   producer.setDaemon(true)
   producer.start()
 
-  private var current: Iterator[Row] = Iterator.empty
+  private var head: ResultPage = null // pulled from the queue, not yet taken
   private var finished = false
-  private var delivered = 0L
+  private var delivered = fromRow
+  private var rows: Iterator[Row] = Iterator.empty
 
-  override def hasNext: Boolean = {
-    if (current.hasNext) return true
-    if (finished) return false
-    // Pull the next page (blocking: producer always terminates each stream
-    // with a page, End, or Err unless the consumer closed first).
-    var next: AnyRef = null
-    while (next == null && !stopped) next = queue.poll(100, TimeUnit.MILLISECONDS)
-    next match {
-      case null => finished = true; false // closed mid-stream
-      case End =>
-        finished = true
-        runtime.onPartitionDrained(st, partition, delivered)
-        false
-      case Err(e) =>
-        finished = true
-        e match {
-          case _: PartitionRecomputeException =>
+  /** The next page without taking it, or null once the stream is over.
+    * Blocks: the producer always ends a stream with a page, End or Err
+    * unless the consumer closed first. */
+  private def peek(): ResultPage = {
+    while (head == null && !finished) {
+      var next: AnyRef = null
+      while (next == null && !stopped) next = queue.poll(100, TimeUnit.MILLISECONDS)
+      next match {
+        case null => finished = true // closed mid-stream
+        case End =>
+          finished = true
+          runtime.onPartitionDrained(st, partition, delivered)
+        case Err(e) =>
+          finished = true
+          e match {
             // Recoverable: the job stays live and the ticket re-fetchable —
             // a fresh stream re-reads the partition self-consistently.
-            ()
-          case _ => runtime.onFetchFailed(st, e)
-        }
-        throw e
-      case page: Array[Row] @unchecked =>
-        current = page.iterator
-        hasNext
+            case _: PartitionRecomputeException | _: FetchOffsetException => ()
+            case _ => runtime.onFetchFailed(st, e)
+          }
+          throw e
+        case page: ResultPage => head = page
+      }
     }
+    head
+  }
+
+  /** Wait for the first page (or the end): the computation token is
+    * stamped, and an unsatisfiable offset has thrown. Returns the token. */
+  private[gateway] def start(): Long = { peek(); streamTokenV }
+
+  /** Take the next page; null once the stream is over. */
+  private[gateway] def nextPage(): ResultPage = {
+    val page = peek()
+    if (page != null) { head = null; delivered += page.rows }
+    page
+  }
+
+  override def hasNext: Boolean = rows.hasNext || {
+    val page = nextPage()
+    page != null && { rows = ArrowCodec.readPage(st.schema, page.bytes).iterator; hasNext }
   }
 
   override def next(): Row = {
     if (!hasNext) throw new NoSuchElementException("partition stream drained")
-    delivered += 1
-    current.next()
+    rows.next()
   }
 
   /** Abandon the stream: pending page jobs stop, nothing is marked
@@ -340,9 +415,9 @@ final class PartitionRowStream private[gateway] (
 }
 
 object PartitionRowStream {
-  /** [[PartitionRowStream.computationToken]] before the first page job
-    * returns. nanoTime can legally be ANY long, but a token is stamped at
-    * most once per stream and compared only against tokens of the same
+  /** The stream's computation token before the first page
+    * is in hand. nanoTime can legally be ANY long, but a token is stamped
+    * at most once per stream and compared only against tokens of the same
     * partition's materializations — MinValue colliding with a real stamp
     * would only skip one detectable splice, never corrupt rows. */
   val NO_TOKEN: Long = Long.MinValue
@@ -357,9 +432,9 @@ object PartitionRowStream {
   * retry are Spark-native (DAGScheduler), so the custom surface is exactly
   * the job registry + ticket delivery + lifecycle that
   * `dist/src/runtime.rs`/`event.rs` implement in Rust. Everything here is
-  * driver-side control plane — no data-plane work happens on this thread
-  * pool, and result partitions are delivered as bounded pages through
-  * [[PartitionRowStream]] (capacity-2 queue of ≤ `fetchPageSize`-row
+  * driver-side control plane — result pages are built and compressed as
+  * Arrow on the executors ([[ResultPages]]) and delivered as bounded pages
+  * through [[PartitionRowStream]] (capacity-2 queue of ≤ `fetchPageSize`-row
   * pages), so a 1000-executor cluster streams results without the driver
   * ever holding a whole partition — let alone the whole result set.
   */
@@ -434,9 +509,12 @@ final class JobRuntime(
     }
   }
 
-  /** SQL entry (SURVEY §3.1 step 2-5): parse/plan via Catalyst, register,
-    * return the ticketed handle. Execution is pull-based — nothing runs
-    * until a ticket is fetched, mirroring the reference's streaming pulls. */
+  /** SQL entry (SURVEY §3.1 step 2-5): parse and analyse via Catalyst,
+    * register, return the ticketed handle. Nothing is planned or run here:
+    * [[JobHandle.tickets]] plans the job, under its group and pool (under
+    * AQE that runs the upstream shuffle stages), and the first fetch of a
+    * ticket runs the final stage — mirroring the reference's streaming
+    * pulls. */
   def submit(sql: String, meta: Map[String, String] = Map.empty): JobHandle =
     submitDataFrame(spark.sql(sql), meta + ("query" -> sql))
 
@@ -451,11 +529,10 @@ final class JobRuntime(
     new JobHandle(this, st)
   }
 
-  /** Bounded streaming fetch of one result partition. The job group and
-    * FAIR pool are set on the stream's producer thread (cancellation +
-    * listener correlation; gateway work never starves other pools'
-    * health queries). */
-  private[gateway] def rowStream(st: JobState, partition: Int): PartitionRowStream = {
+  /** Bounded streaming fetch of one result partition, from row `fromRow`.
+    * The stream's producer thread runs under the job's group and FAIR pool
+    * ([[JobState.underJob]]). */
+  private[gateway] def rowStream(st: JobState, partition: Int, fromRow: Long): PartitionRowStream = {
     if (!registry.containsKey(st.jobId)) st.status match {
       // A COMPLETED job can still be re-fetched while a caller holds its
       // handle: completion is inferred from a drained stream, and a drain
@@ -476,13 +553,13 @@ final class JobRuntime(
           s"job ${st.jobId} is not live (cleaned up or cancelled)")
     }
     if (st.firstFetchAtMs < 0) st.firstFetchAtMs = System.currentTimeMillis()
-    new PartitionRowStream(this, st, partition, st.pageSize)
+    new PartitionRowStream(this, st, partition, fromRow)
   }
 
   /** Materializing fetch = drain the bounded stream into a Seq. Memory here
     * is the caller's choice; the transport itself stays paged. */
   private[gateway] def fetch(st: JobState, partition: Int): Seq[Row] = {
-    val stream = rowStream(st, partition)
+    val stream = rowStream(st, partition, 0L)
     try stream.toVector finally stream.close()
   }
 

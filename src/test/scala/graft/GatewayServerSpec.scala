@@ -376,20 +376,18 @@ class GatewayServerSpec extends SparkSpec {
     } finally { sock.close(); srv.close(); rt.close() }
   }
 
-  test("fetch_arrow on an Arrow-unsupported schema fails before the ack (no desync)") {
-    // array/struct/map results can't cross the Arrow wire; the server must
-    // answer a clean JSON error INSTEAD of the ack, so the client never
-    // starts reading raw Arrow bytes that won't come.
+  test("a result type the Arrow pages cannot carry is refused at submit (no desync)") {
+    // Results travel as Arrow pages over both wires, so a type the pages
+    // cannot carry (an interval) is refused while the job is planned, as
+    // a clean JSON error, and the connection keeps speaking the protocol.
     withServer { (_, in, out) =>
-      out.println("""{"op": "submit", "sql": "SELECT array(id, id + 1) AS a FROM range(0, 10, 1, 1)"}""")
+      out.println("""{"op": "submit", "sql": "SELECT INTERVAL '1' DAY AS i FROM range(0, 10, 1, 1)"}""")
+      val err = in.readLine()
+      assert(err.contains("\"ok\": false") && err.contains("does not support"), err)
+      out.println("""{"op": "submit", "sql": "SELECT id FROM range(0, 10, 1, 1)"}""")
       val resp = in.readLine()
       assert(resp.contains("\"ok\": true"), resp)
       val jobId = """"job_id": "([^"]+)"""".r.findFirstMatchIn(resp).get.group(1)
-      out.println(s"""{"op": "fetch_arrow", "job_id": "$jobId", "partition": 0}""")
-      val err = in.readLine()
-      assert(err.contains("\"ok\": false"), err)
-      assert(!err.contains("arrow_ipc_stream"), err)
-      // The connection still speaks the protocol: text fetch delivers rows.
       out.println(s"""{"op": "fetch", "job_id": "$jobId", "partition": 0}""")
       var line = readPastHeader(() => in.readLine())
       var rows = 0
@@ -1019,5 +1017,53 @@ class GatewayServerSpec extends SparkSpec {
       spark.conf.unset("graft.grace.probe")
       client.close(); srv.close(); rt.close()
     }
+  }
+
+  test("array, map and struct columns with nulls at every level reach the " +
+      "client through fetch_arrow and fetch, equal to Spark's collect") {
+    val sql = "SELECT id, " +
+      "CASE WHEN id % 4 = 0 THEN NULL WHEN id % 4 = 1 THEN CAST(array() AS array<int>) " +
+      "ELSE array(CAST(id AS INT), NULL, CAST(id * 2 AS INT)) END AS a, " +
+      "CASE WHEN id % 3 = 0 THEN NULL " +
+      "ELSE map(CAST(id AS STRING), IF(id % 2 = 0, NULL, id), 'k', id * 10) END AS m, " +
+      "CASE WHEN id % 5 = 0 THEN NULL ELSE named_struct('a', IF(id % 2 = 0, NULL, " +
+      "CAST(id AS INT)), 'b', IF(id % 3 = 1, NULL, CAST(id AS STRING))) END AS s " +
+      "FROM range(0, 40, 1, 2)"
+    val want = spark.sql(sql)
+    assert(want.schema.map(_.dataType.simpleString) ==
+      Seq("bigint", "array<int>", "map<string,bigint>", "struct<a:int,b:string>"))
+    assert(ArrowCodec.toSparkSchema(ArrowCodec.toArrowSchema(want.schema)) == want.schema)
+    val expected = want.collect().toVector
+    def json(v: Any): String = v match {
+      case null => "null"
+      case s: String => "\"" + s + "\""
+      case r: org.apache.spark.sql.Row => r.toSeq.map(json).mkString("[", ",", "]")
+      case m: scala.collection.Map[_, _] =>
+        m.map { case (k, x) => json(k) + ":" + json(x) }.mkString("{", ",", "}")
+      case xs: scala.collection.Seq[_] => xs.map(json).mkString("[", ",", "]")
+      case x => x.toString
+    }
+    val rt = new JobRuntime(spark)
+    val srv = new GatewayServer(rt)
+    val client = new graft.gateway.GatewayClient("127.0.0.1", () => srv.boundPort)
+    try {
+      assert(client.fetchAllArrow(sql) == expected)
+      assert(client.fetchAll(sql) == expected.map(r => s"""{"row": ${json(r)}}"""))
+    } finally { client.close(); srv.close(); rt.close() }
+  }
+
+  test("handles of jobs the runtime ends itself (never fetched) are swept") {
+    val rt = new JobRuntime(spark, graft.gateway.GatewayConfig(
+      ttlCheckInterval = 100.millis, neverFetchedTimeout = 300.millis))
+    val srv = new GatewayServer(rt, handleGraceMs = 200)
+    val client = new graft.gateway.GatewayClient("127.0.0.1", () => srv.boundPort)
+    try {
+      for (_ <- 0 until 5) client.submit("SELECT id FROM range(0, 10, 1, 1)")
+      assert(srv.pinnedHandles >= 1)
+      val deadline = System.currentTimeMillis() + 5000
+      while (srv.pinnedHandles > 0 && System.currentTimeMillis() < deadline) Thread.sleep(50)
+      assert(srv.pinnedHandles == 0, s"${srv.pinnedHandles} never-fetched handles still pinned")
+      assert(rt.liveJobIds.isEmpty)
+    } finally { client.close(); srv.close(); rt.close() }
   }
 }

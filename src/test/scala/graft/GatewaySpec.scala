@@ -393,4 +393,49 @@ class GatewaySpec extends SparkSpec {
     assert(gateway.Udfs.fib(0) == 0L)
     assert(gateway.Udfs.fib(-10) == 55L) // |n| iterations like n.abs()
   }
+
+  test("ticket planning runs under the job: a GROUP BY's shuffle stage is " +
+      "recorded in its stages JSON") {
+    // Under AQE, planning the final stage runs the upstream shuffle stage;
+    // it must run in the job's group and pool, where cancel, TTL and
+    // running_jobs see it.
+    withRuntime() { rt =>
+      val h = rt.submit(
+        "SELECT id % 7 AS k, count(*) AS n FROM range(0, 10000, 1, 4) GROUP BY id % 7")
+      assert(h.tickets.nonEmpty)
+      def stages = rt.runningJobs().collect().head.getString(3)
+      val stage = "\"\\d+\": \\{\"num_tasks\"".r
+      val deadline = System.nanoTime() + 10.seconds.toNanos
+      while (stage.findFirstIn(stages).isEmpty && System.nanoTime() < deadline) Thread.sleep(50)
+      assert(stage.findFirstIn(stages).nonEmpty, stages)
+    }
+  }
+
+  test("one Spark job per result: 3 partitions, 2 of them empty, drained " +
+      "ticket by ticket") {
+    withRuntime() { rt =>
+      val h = rt.submit("SELECT id FROM range(0, 300, 1, 3) WHERE id < 100")
+      val started = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+      val ended = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+      val listener = new org.apache.spark.scheduler.SparkListener {
+        override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+          if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == h.jobId))
+            started.add(e.jobId)
+        override def onJobEnd(e: org.apache.spark.scheduler.SparkListenerJobEnd): Unit =
+          if (started.contains(e.jobId)) ended.add(e.jobId)
+      }
+      spark.sparkContext.addSparkListener(listener)
+      try {
+        val tickets = h.tickets
+        assert(tickets.size == 3)
+        assert(tickets.map(h.fetch(_).size) == Seq(100, 0, 0))
+        assert(h.status == JobStatus.Completed)
+        val deadline = System.nanoTime() + 10.seconds.toNanos
+        while ((started.isEmpty || ended.size < started.size) && System.nanoTime() < deadline)
+          Thread.sleep(20)
+        Thread.sleep(300) // any later job's events would be on the bus by now
+        assert(started.size == 1, s"${started.size} Spark jobs for one 3-ticket result")
+      } finally spark.sparkContext.removeSparkListener(listener)
+    }
+  }
 }

@@ -3,6 +3,7 @@
 
     python3 tools/perfbench_ab.py REF_A REF_B --workload export --pairs 10
         [--seconds 30] [--seeds 3,21,22,...] [--trace 0|1] [--json out.json]
+        [--metric rows_per_s]
 
 REF_A is the base (the parent), REF_B the change. Each ref is checked out
 into its own throwaway `git worktree` (removed again at the end); a ref
@@ -24,6 +25,12 @@ pairs"): use them to check that a workload did not move.
 Every run's correctness and failed-operation count is printed too, and no
 metric is claimed ("no claim") when any B run is incorrect or incomplete,
 or when B's runs fail more operations in total than A's.
+
+--metric NAME adds a per-pair table for that metric: both sides' values,
+B/A, which side ran first, and each run's CPU canary (`canary_ms`, from
+the run's "# <workload> info canary_ms" line). A pair B lost while its
+canaries moved with it reads as host drift; one lost at steady canaries
+reads as the change.
 
 Exit code 0 when every run completed, 1 otherwise; the verdicts are a
 measurement, not a gate.
@@ -67,7 +74,8 @@ def directions(root):
 
 
 def run_once(root, workload, seed, seconds, trace):
-    """One perfbench run; returns its final JSON line, or None if it failed."""
+    """One perfbench run; returns its final JSON line plus the run's
+    `canary_ms` info value (None when absent), or None if it failed."""
     cmd = [sys.executable, "perfbench/run.py", "--workload", workload,
            "--seed", str(seed), "--seconds", str(seconds), "--trace", str(trace)]
     p = subprocess.run(cmd, cwd=root, capture_output=True, text=True)
@@ -75,7 +83,31 @@ def run_once(root, workload, seed, seconds, trace):
     if p.returncode != 0 or not lines:
         sys.stderr.write(p.stderr[-3000:])
         return None
-    return json.loads(lines[-1])
+    run = json.loads(lines[-1])
+    prefix = f"# {workload} info canary_ms = "
+    run["canary_ms"] = next((float(l[len(prefix):]) for l in lines
+                             if l.startswith(prefix)), None)
+    return run
+
+
+def pair_table(runs, seeds, name):
+    """Lines of the --metric table: one per pair, in run order."""
+    def val(r, key=None):
+        if r is None:
+            return None
+        return r.get("canary_ms") if key is None else r["metrics"].get(key, {}).get("value")
+
+    def fmt(x):
+        return "-" if x is None else f"{x:.6g}"
+
+    out = [f"\n{name} per pair (first = the side that ran first; canary_ms per run)"]
+    for i, ((a, b), seed) in enumerate(zip(runs, seeds)):
+        va, vb = val(a, name), val(b, name)
+        ratio = f"{vb / va:.3f}" if va and vb is not None else "-"
+        out.append(f"  pair {i + 1:2d} seed {seed:4d}: A {fmt(va):>10s}  B {fmt(vb):>10s}  "
+                   f"B/A {ratio:>6s}  first {'A' if i % 2 == 0 else 'B'}  "
+                   f"canary A {fmt(val(a))} B {fmt(val(b))}")
+    return out
 
 
 def quartiles(xs):
@@ -134,6 +166,7 @@ def main():
     ap.add_argument("--seeds", help="comma-separated seeds, one per pair (default 1..N)")
     ap.add_argument("--trace", type=int, choices=[0, 1], default=0)
     ap.add_argument("--json", help="also write the full report here")
+    ap.add_argument("--metric", help="print this metric per pair, with each run's canary_ms")
     args = ap.parse_args()
     seeds = ([int(s) for s in args.seeds.split(",")] if args.seeds
              else list(range(1, args.pairs + 1)))
@@ -173,6 +206,8 @@ def main():
                   f"B {b[1]:.6g} [{b[0]:.6g}-{b[2]:.6g}]  B/A {ratio}  "
                   f"B wins {m['b_wins']}/{m['pairs']} ({m['better']} is better)"
                   f"  -> {m['verdict']}")
+        if args.metric:
+            print("\n".join(pair_table(runs, seeds, args.metric)))
         if args.json:
             with open(args.json, "w") as f:
                 json.dump({"ref_a": args.ref_a, "ref_b": args.ref_b,
