@@ -92,20 +92,17 @@ final case class GatewayAuth(user: String = "admin", password: String = "admin12
   * error answers included) is flushed once, when it is complete; a longer
   * one also leaves each time the buffer fills, so a slow client still
   * blocks the writer (backpressure). The server holds at most one fetch
-  * page, one encoded Arrow batch and the 64 KB buffer per connection. An
+  * page (one encoded Arrow batch) and the 64 KB buffer per connection. An
   * ack written and flushed on its own would let Nagle hold the body until
   * the client's delayed ACK — 40 ms per fetch on Linux.
   *
   * The accept loop and per-connection handlers run on daemon threads
   * (driver-side control plane only — row data streams straight from the
   * per-partition runJob results, never accumulating beyond one partition).
-  *
-  * `arrowBatchRows` is kept for source compatibility and no longer read:
-  * the Arrow record batches are the runtime's result pages, whose size is
+  * The Arrow record batches are the runtime's result pages, whose size is
   * `GatewayConfig.fetchPageSize`.
   */
 final class GatewayServer(runtime: JobRuntime, port: Int = 0,
-    arrowBatchRows: Int = 4096,
     auth: Option[GatewayAuth] = Some(GatewayAuth()),
     handleGraceMs: Long = 60000L) extends AutoCloseable {
   private val server = new ServerSocket(port)
@@ -384,7 +381,8 @@ final class GatewayServer(runtime: JobRuntime, port: Int = 0,
       case Some(op @ ("fetch" | "fetch_arrow")) =>
         val jobId = field(line, "job_id").getOrElse(
           throw new IllegalArgumentException(s"$op requires job_id"))
-        val p = field(line, "partition").getOrElse("0").toInt
+        val p = field(line, "partition").getOrElse(
+          throw new IllegalArgumentException(s"$op requires a non-negative partition")).toInt
         // Resume offset (100-TB hardening over the reference's whole-task
         // re-fetch, runtime.rs:499-525): a retry after a mid-stream drop
         // asks for rows FROM `offset`, so a multi-GB partition re-streams
@@ -398,13 +396,13 @@ final class GatewayServer(runtime: JobRuntime, port: Int = 0,
         val ctoken = field(line, "ctoken")
         val h = handles.getOrElse(jobId,
           throw new IllegalStateException(s"unknown job $jobId"))
-        // Bounded streaming: ≤fetchPageSize-row pages go through the
-        // connection buffer to the socket — as the cached Arrow bytes, or
-        // decoded to row lines. A slow client backpressures the page
-        // producer via blocking TCP writes once the buffer fills — the
-        // reference's bounded-channel semantics (dist/src/runtime.rs:253-303)
-        // end to end. The server holds at most one page in hand, the
-        // stream's queue and the connection buffer.
+        // Bounded streaming: this thread pulls one ≤fetchPageSize-row page
+        // at a time and writes it through the connection buffer to the
+        // socket — as the cached Arrow bytes, or decoded to row lines. A
+        // slow client blocks the TCP writes once the buffer fills, and so
+        // the next page job — the reference's bounded-channel semantics
+        // (dist/src/runtime.rs:253-303) end to end. The server holds at
+        // most one page in hand and the connection buffer.
         val stream = h.fetchStream(Ticket(jobId, p), off)
         var acked = false
         val n =

@@ -35,8 +35,8 @@ object JobStatus {
   * these down like the reference app does (`app/src/main.rs:53-55`).
   * `fetchPageSize` bounds the rows of one result page — one Arrow record
   * batch — and so how many rows of a result partition ever sit on the
-  * driver at once during a ticket fetch (the analog of the reference's
-  * Arrow batch size feeding its capacity-2 result channel,
+  * driver at once during a ticket fetch: a stream holds one page at a
+  * time (the analog of the reference's Arrow batch size,
   * `dist/src/runtime.rs:253-303`). */
 final case class GatewayConfig(
     jobTtl: FiniteDuration = 30.minutes,
@@ -225,7 +225,10 @@ final class JobHandle private[gateway] (runtime: JobRuntime, state: JobState) {
     * the caller chooses to hold the whole partition). Re-fetching a ticket
     * re-reads the cached pages — same semantics as the reference's
     * fresh-TaskSet re-execution. */
-  def fetch(ticket: Ticket): Seq[Row] = runtime.fetch(state, ticket.partition)
+  def fetch(ticket: Ticket): Seq[Row] = {
+    val stream = fetchStream(ticket)
+    try stream.toVector finally stream.close()
+  }
   /** Test hook: the Dataset the job holds now, if any. A released job
     * holds none; its grace re-fetch rebuilds one from the logical plan. */
   private[graft] def heldDataset: Option[DataFrame] = state.heldDataset
@@ -237,11 +240,11 @@ final class JobHandle private[gateway] (runtime: JobRuntime, state: JobState) {
     state.pages.rdd.persist(StorageLevel.MEMORY_AND_DISK)
     ()
   }
-  /** Stream one partition's rows through bounded pages: at most
-    * `fetchPageSize` rows × (queue capacity 2 + the page in hand) ever sit
-    * on the driver — the Spark analog of the reference's backpressured
-    * capacity-2 Arrow batch channel (`dist/src/runtime.rs:253-303`).
-    * Close early to abandon the stream (remaining page jobs stop). */
+  /** Stream one partition's rows through bounded pages, pulled one at a
+    * time on the calling thread: at most one page of `fetchPageSize` rows
+    * sits on the driver — the Spark analog of the reference's
+    * backpressured Arrow batch stream (`dist/src/runtime.rs:253-303`).
+    * Close early to abandon the stream (no further page job runs). */
   def fetchStream(ticket: Ticket): PartitionRowStream =
     runtime.rowStream(state, ticket.partition, 0L)
   /** [[fetchStream]] from row `fromRow` of the partition (an offset
@@ -257,23 +260,21 @@ final class JobHandle private[gateway] (runtime: JobRuntime, state: JobState) {
     state.completion.await(timeout.toMillis, TimeUnit.MILLISECONDS)
 }
 
-/** A pull-backpressured stream over one result partition, from row
-  * `fromRow`: pages for the gateway's Arrow wire ([[nextPage]]), rows for
-  * everyone else (each page decoded as it is reached — the one page
-  * format serves both).
+/** A pull iterator over one result partition, from row `fromRow`: pages
+  * for the gateway's Arrow wire ([[nextPage]]), rows for everyone else
+  * (each page decoded as it is reached — the one page format serves
+  * both).
   *
-  * A producer thread, under the job's group and pool, takes the
-  * partition's layout from [[ResultPages.layout]] (running the job's one
-  * layout job if no fetch has yet), then issues one narrow page job at a
-  * time for the pages it still needs and hands them to the consumer
-  * through a capacity-2 bounded queue — the direct Spark analog of the
-  * reference streaming a partition as Arrow batches through a capacity-2
-  * channel (`dist/src/runtime.rs:253-303`,
-  * `networks/tonic/src/server.rs:109-141`). The driver therefore never
-  * holds more than ~3 pages of the partition regardless of partition size,
-  * and a slow consumer blocks the producer (backpressure), not memory. An
-  * empty partition, or a first page that rode back with the layout job,
-  * costs no page job.
+  * Every pull runs on the caller's thread, under the job's group and pool
+  * ([[JobState.underJob]]). The first pull takes the partition's layout
+  * from [[ResultPages.layout]] (running the job's one layout job if no
+  * fetch has yet); each later pull runs the one narrow page job for the
+  * page it needs. Nothing is read ahead: the pages already sit in the
+  * executors' cache, so the stream holds at most one page on the driver,
+  * a slow consumer simply pulls later (backpressure), and a closed stream
+  * runs no further page job — the iterator discipline of Spark's own
+  * `Dataset.toLocalIterator`. An empty partition, or a first page that
+  * rode back with the layout job, costs no page job.
   *
   * Every page carries the partition's computation token: a page whose
   * token differs from this stream's first page means the cached block was
@@ -283,7 +284,7 @@ final class JobHandle private[gateway] (runtime: JobRuntime, state: JobState) {
   * throws [[FetchOffsetException]] at the first pull.
   *
   * Draining the stream marks the ticket delivered (completion bookkeeping
-  * identical to a materialized fetch); a failed page job fails the job.
+  * identical to a materialized fetch); any other failed pull fails the job.
   */
 final class PartitionRowStream private[gateway] (
     runtime: JobRuntime,
@@ -292,11 +293,18 @@ final class PartitionRowStream private[gateway] (
     fromRow: Long)
   extends Iterator[Row] with AutoCloseable {
 
-  private val queue =
-    new java.util.concurrent.ArrayBlockingQueue[AnyRef](2)
-  @volatile private var stopped = false
-  private object End
-  private final case class Err(e: Throwable)
+  // Set by the first pull: the materialization this stream reads (one per
+  // stream, even if the job is released), its page row counts, page 0 when
+  // it rode back with the layout job, the page holding row `fromRow` and
+  // the rows of that page before it. `k` is the next page to pull.
+  private var pages: ResultPages = null
+  private var counts: Array[Int] = null
+  private var handed: ResultPage = null
+  private var first, skip, k = 0
+  private var head: ResultPage = null   // pulled, not yet taken
+  private var finished = false          // drained, failed or closed: no further page job
+  private var delivered = fromRow
+  private var rows: Iterator[Row] = Iterator.empty
 
   /** The partition's computation token as stamped by this stream's FIRST
     * page ([[PartitionRowStream.NO_TOKEN]] until it is in hand; the layout
@@ -307,86 +315,69 @@ final class PartitionRowStream private[gateway] (
     * tail come from DIFFERENT computations (recomputed row order is not
     * guaranteed identical), so skip-K would silently splice two orderings
     * (ADVICE r15 high). */
-  @volatile private var streamTokenV: Long = PartitionRowStream.NO_TOKEN
-
-  private def offer(x: AnyRef): Unit = {
-    while (!stopped && !queue.offer(x, 100, TimeUnit.MILLISECONDS)) {}
-  }
+  private var streamToken: Long = PartitionRowStream.NO_TOKEN
 
   private def recomputed(detail: String) = new PartitionRecomputeException(
     s"result partition $partition of job ${st.jobId} was recomputed $detail; " +
       "refusing to deliver inconsistent rows — re-fetch the ticket")
 
-  private val producer = new Thread(() => {
+  /** The next page, pulled under the job; null past the last one. A
+    * failure ends the stream, and fails the job unless it leaves the
+    * ticket re-fetchable (a fresh stream re-reads the partition
+    * self-consistently). */
+  private def pull(): ResultPage =
     try st.underJob {
-      val pages = st.pages // one materialization per stream, even if the job is released
-      val (layoutToken, counts, handed) = pages.layout(partition)
-      val total = counts.foldLeft(0L)(_ + _)
-      if (fromRow > total)
-        throw new FetchOffsetException(s"offset $fromRow beyond partition end ($total rows)")
-      // The page holding row `fromRow`; the pages before it are skipped
-      // by their counts, never fetched.
-      var k = 0
-      var before = 0L
-      while (k < counts.length && before + counts(k) <= fromRow) { before += counts(k); k += 1 }
-      val first = k
-      if (first == counts.length) streamTokenV = layoutToken
-      while (!stopped && k < counts.length) {
-        val page = if (k == 0 && handed != null) handed else pages.page(partition, k)
+      if (counts == null) {
+        pages = st.pages
+        val (layoutToken, c, h) = pages.layout(partition)
+        val total = c.foldLeft(0L)(_ + _)
+        if (fromRow > total)
+          throw new FetchOffsetException(s"offset $fromRow beyond partition end ($total rows)")
+        // The pages before the one holding `fromRow` are skipped by their
+        // counts, never fetched.
+        var before = 0L
+        while (k < c.length && before + c(k) <= fromRow) { before += c(k); k += 1 }
+        counts = c; first = k; skip = (fromRow - before).toInt
+        handed = if (k == 0) h else null
+        if (k == c.length) streamToken = layoutToken
+      }
+      if (k == counts.length) null else {
+        val page = if (handed != null) handed else pages.page(partition, k)
+        handed = null
         if (page == null) throw recomputed(s"with fewer pages than the ${k + 1} it had")
-        if (k == first) streamTokenV = page.token
-        else if (page.token != streamTokenV)
+        if (k == first) streamToken = page.token
+        else if (page.token != streamToken)
           throw recomputed("mid-stream (cached block lost); page boundaries of the new " +
             "computation may not line up")
         st.maxPageRows.updateAndGet(m => math.max(m, page.rows.toLong))
-        val skip = (fromRow - before).toInt
-        offer(if (k > first || skip == 0) page
-          else ResultPage(page.token, page.rows - skip, ArrowCodec.dropRows(st.schema, page.bytes, skip)))
+        val out = if (k > first || skip == 0) page
+          else ResultPage(page.token, page.rows - skip, ArrowCodec.dropRows(st.schema, page.bytes, skip))
         k += 1
+        out
       }
-      if (!stopped) offer(End)
     } catch {
-      case e: Throwable => offer(Err(e))
+      case e: Throwable =>
+        finished = true
+        e match {
+          case _: PartitionRecomputeException | _: FetchOffsetException => ()
+          case _ => runtime.onFetchFailed(st, e)
+        }
+        throw e
     }
-  }, s"graft-fetch-${st.jobId}-p$partition")
-  producer.setDaemon(true)
-  producer.start()
 
-  private var head: ResultPage = null // pulled from the queue, not yet taken
-  private var finished = false
-  private var delivered = fromRow
-  private var rows: Iterator[Row] = Iterator.empty
-
-  /** The next page without taking it, or null once the stream is over.
-    * Blocks: the producer always ends a stream with a page, End or Err
-    * unless the consumer closed first. */
+  /** The next page without taking it, or null once the stream is over. */
   private def peek(): ResultPage = {
-    while (head == null && !finished) {
-      var next: AnyRef = null
-      while (next == null && !stopped) next = queue.poll(100, TimeUnit.MILLISECONDS)
-      next match {
-        case null => finished = true // closed mid-stream
-        case End =>
-          finished = true
-          runtime.onPartitionDrained(st, partition, delivered)
-        case Err(e) =>
-          finished = true
-          e match {
-            // Recoverable: the job stays live and the ticket re-fetchable —
-            // a fresh stream re-reads the partition self-consistently.
-            case _: PartitionRecomputeException | _: FetchOffsetException => ()
-            case _ => runtime.onFetchFailed(st, e)
-          }
-          throw e
-        case page: ResultPage => head = page
-      }
+    if (head == null && !finished) {
+      head = pull()
+      finished = head == null
+      if (finished) runtime.onPartitionDrained(st, partition, delivered)
     }
     head
   }
 
-  /** Wait for the first page (or the end): the computation token is
+  /** Pull the first page (or reach the end): the computation token is
     * stamped, and an unsatisfiable offset has thrown. Returns the token. */
-  private[gateway] def start(): Long = { peek(); streamTokenV }
+  private[gateway] def start(): Long = { peek(); streamToken }
 
   /** Take the next page; null once the stream is over. */
   private[gateway] def nextPage(): ResultPage = {
@@ -405,12 +396,12 @@ final class PartitionRowStream private[gateway] (
     rows.next()
   }
 
-  /** Abandon the stream: pending page jobs stop, nothing is marked
+  /** Abandon the stream: no further page job runs, nothing is marked
     * delivered (the ticket stays re-fetchable). Draining to the end makes
     * close a no-op. */
   override def close(): Unit = {
-    stopped = true
-    queue.clear()
+    finished = true
+    head = null
   }
 }
 
@@ -433,10 +424,10 @@ object PartitionRowStream {
   * the job registry + ticket delivery + lifecycle that
   * `dist/src/runtime.rs`/`event.rs` implement in Rust. Everything here is
   * driver-side control plane — result pages are built and compressed as
-  * Arrow on the executors ([[ResultPages]]) and delivered as bounded pages
-  * through [[PartitionRowStream]] (capacity-2 queue of ≤ `fetchPageSize`-row
-  * pages), so a 1000-executor cluster streams results without the driver
-  * ever holding a whole partition — let alone the whole result set.
+  * Arrow on the executors ([[ResultPages]]) and pulled one
+  * ≤ `fetchPageSize`-row page at a time through [[PartitionRowStream]], so
+  * a 1000-executor cluster streams results without the driver ever
+  * holding a whole partition — let alone the whole result set.
   */
 final class JobRuntime(
     val spark: SparkSession,
@@ -530,8 +521,10 @@ final class JobRuntime(
   }
 
   /** Bounded streaming fetch of one result partition, from row `fromRow`.
-    * The stream's producer thread runs under the job's group and FAIR pool
-    * ([[JobState.underJob]]). */
+    * The stream's page jobs run on the pulling thread, under the job's
+    * group and FAIR pool ([[JobState.underJob]]). A partition outside the
+    * job's tickets is refused here, before any stream exists, so it leaves
+    * the job untouched. */
   private[gateway] def rowStream(st: JobState, partition: Int, fromRow: Long): PartitionRowStream = {
     if (!registry.containsKey(st.jobId)) st.status match {
       // A COMPLETED job can still be re-fetched while a caller holds its
@@ -552,15 +545,11 @@ final class JobRuntime(
         throw new IllegalStateException(
           s"job ${st.jobId} is not live (cleaned up or cancelled)")
     }
+    if (partition < 0 || partition >= st.numPartitions)
+      throw new IllegalArgumentException(
+        s"job ${st.jobId} has no partition $partition (tickets 0 until ${st.numPartitions})")
     if (st.firstFetchAtMs < 0) st.firstFetchAtMs = System.currentTimeMillis()
     new PartitionRowStream(this, st, partition, fromRow)
-  }
-
-  /** Materializing fetch = drain the bounded stream into a Seq. Memory here
-    * is the caller's choice; the transport itself stays paged. */
-  private[gateway] def fetch(st: JobState, partition: Int): Seq[Row] = {
-    val stream = rowStream(st, partition, 0L)
-    try stream.toVector finally stream.close()
   }
 
   /** CheckJobCompleted: all final-stage partitions delivered → cleanup

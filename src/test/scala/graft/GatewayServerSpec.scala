@@ -92,8 +92,8 @@ class GatewayServerSpec extends SparkSpec {
     // (networks/tonic/src/server.rs:109-141). Client reads the ack line
     // byte-wise off the raw stream (no read-ahead), then hands the same
     // stream to the Arrow reader, then reads the trailing control line.
-    val rt = new JobRuntime(spark)
-    val srv = new GatewayServer(rt, arrowBatchRows = 256)
+    val rt = new JobRuntime(spark, graft.gateway.GatewayConfig(fetchPageSize = 256))
+    val srv = new GatewayServer(rt)
     val sock = new Socket("127.0.0.1", srv.boundPort)
     try {
       val rawIn = new java.io.BufferedInputStream(sock.getInputStream)
@@ -138,8 +138,8 @@ class GatewayServerSpec extends SparkSpec {
     // Four independent TCP clients each stream a different partition of
     // the same job as Arrow IPC at the same time — the reference's
     // many-FlightData-streams-per-job serving shape.
-    val rt = new JobRuntime(spark)
-    val srv = new GatewayServer(rt, arrowBatchRows = 64)
+    val rt = new JobRuntime(spark, graft.gateway.GatewayConfig(fetchPageSize = 64))
+    val srv = new GatewayServer(rt)
     def readLineRaw(in: java.io.InputStream): String = {
       val sb = new StringBuilder
       var b = in.read()
@@ -640,8 +640,8 @@ class GatewayServerSpec extends SparkSpec {
     // desync the protocol. Also exercises Completed-job re-fetch: the
     // first whole drain puts the single-partition job terminal, and the
     // resumed fetches ride the handle grace window (recompute).
-    val rt = new JobRuntime(spark)
-    val srv = new GatewayServer(rt, arrowBatchRows = 128)
+    val rt = new JobRuntime(spark, graft.gateway.GatewayConfig(fetchPageSize = 128))
+    val srv = new GatewayServer(rt)
     val sock = new Socket("127.0.0.1", srv.boundPort)
     try {
       val rawIn = new java.io.BufferedInputStream(sock.getInputStream)
@@ -689,8 +689,8 @@ class GatewayServerSpec extends SparkSpec {
     // all-or-nothing per batch), so kill points inside the schema
     // message, inside a batch, between batches, and inside the trailing
     // control line each exercise a different kept-rows/offset shape.
-    val rt = new JobRuntime(spark)
-    val srv = new GatewayServer(rt, arrowBatchRows = 64)
+    val rt = new JobRuntime(spark, graft.gateway.GatewayConfig(fetchPageSize = 64))
+    val srv = new GatewayServer(rt)
     val sql = "SELECT id, id * 3 AS t FROM range(0, 500, 1, 1)"
     val direct = new graft.gateway.GatewayClient("127.0.0.1", () => srv.boundPort)
     try {
@@ -803,7 +803,7 @@ class GatewayServerSpec extends SparkSpec {
     // server answered the recompute with a JSON error line inside the raw
     // Arrow stream; the client read it as a message length and blocked.
     val rt = new JobRuntime(spark, graft.gateway.GatewayConfig(fetchPageSize = 50))
-    val srv = new GatewayServer(rt, arrowBatchRows = 100)
+    val srv = new GatewayServer(rt)
     val retries = new java.util.concurrent.atomic.AtomicInteger(0)
     val client = new graft.gateway.GatewayClient("127.0.0.1", () => srv.boundPort,
       sleeper = _ => { retries.incrementAndGet(); () }, jitterFrac = () => 0.0)
@@ -1065,5 +1065,45 @@ class GatewayServerSpec extends SparkSpec {
       assert(srv.pinnedHandles == 0, s"${srv.pinnedHandles} never-fetched handles still pinned")
       assert(rt.liveJobIds.isEmpty)
     } finally { client.close(); srv.close(); rt.close() }
+  }
+
+  test("a fetch of a partition the job does not have answers ok:false and " +
+      "leaves the job serving") {
+    // Before the range check, partition 7 of a one-partition job reached
+    // the layout job as an index out of bounds, which failed the job for
+    // every client; an unquoted -1 matched no field and fetched partition 0.
+    val rt = new JobRuntime(spark)
+    val srv = new GatewayServer(rt)
+    val sock = new Socket("127.0.0.1", srv.boundPort)
+    try {
+      val rawIn = new java.io.BufferedInputStream(sock.getInputStream)
+      val out = new PrintWriter(sock.getOutputStream, true)
+      def readLineRaw(): String = {
+        val sb = new StringBuilder
+        var b = rawIn.read()
+        while (b != -1 && b != '\n') { sb.append(b.toChar); b = rawIn.read() }
+        sb.toString
+      }
+      out.println(handshakeLine)
+      assert(readLineRaw().contains("\"ok\": true"))
+      out.println("""{"op": "submit", "sql": "SELECT id FROM range(0, 100, 1, 1)"}""")
+      val resp = readLineRaw()
+      assert(resp.contains("\"partitions\": 1"), resp)
+      val jobId = """"job_id": "([^"]+)"""".r.findFirstMatchIn(resp).get.group(1)
+      val h = rt.handleOf(jobId).get
+      for (p <- Seq("7", "-1")) {
+        out.println(s"""{"op": "fetch_arrow", "job_id": "$jobId", "partition": $p}""")
+        val rej = readLineRaw()
+        assert(rej.contains("\"ok\": false"), s"partition $p: $rej")
+      }
+      intercept[IllegalArgumentException](h.fetch(graft.gateway.Ticket(jobId, 1)))
+      assert(rt.liveJobIds.contains(jobId), s"job ended: ${h.status}")
+      out.println(s"""{"op": "fetch_arrow", "job_id": "$jobId", "partition": 0}""")
+      assert(readLineRaw().contains("arrow_ipc_stream"))
+      val (_, rows) = ArrowCodec.read(rawIn)
+      assert(rows.map(_.getLong(0)) == (0L until 100L))
+      assert(readLineRaw().contains("\"rows\": 100"))
+      assert(h.status == graft.gateway.JobStatus.Completed)
+    } finally { sock.close(); srv.close(); rt.close() }
   }
 }

@@ -121,7 +121,7 @@ class GatewaySpec extends SparkSpec {
     // The reference serves many tickets at once, each through its own
     // bounded channel; the analog contract: N simultaneous consumers, one
     // per partition ticket, each sees its partition complete, in order,
-    // and no page ever exceeds fetchPageSize — however the producer
+    // and no page ever exceeds fetchPageSize — however the consumer
     // threads interleave.
     withRuntime(GatewayConfig(fetchPageSize = 500)) { rt =>
       val h = rt.submit("SELECT id FROM range(0, 80000, 1, 8)") // 8 partitions
@@ -210,6 +210,33 @@ class GatewaySpec extends SparkSpec {
       val full = h.fetch(h.tickets.head) // fresh re-fetch from the cached RDD
       assert(full.size == 10000)
       assert(h.status == JobStatus.Completed)
+    }
+  }
+
+  test("a closed stream runs no further page job") {
+    // Page 0 rides back with the layout job, so 50 rows then close() cost
+    // exactly one Spark job; a stream that read ahead would already have
+    // run the page jobs for pages 1, 2, ...
+    withRuntime(GatewayConfig(fetchPageSize = 100)) { rt =>
+      val h = rt.submit("SELECT id FROM range(0, 10000, 1, 1)")
+      val started = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+      val listener = new org.apache.spark.scheduler.SparkListener {
+        override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+          if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == h.jobId))
+            started.add(e.jobId)
+      }
+      spark.sparkContext.addSparkListener(listener)
+      try {
+        val s = h.fetchStream(h.tickets.head)
+        assert(s.take(50).map(_.getLong(0)).toVector == (0L until 50L).toVector)
+        s.close()
+        val deadline = System.nanoTime() + 10.seconds.toNanos
+        while (started.isEmpty && System.nanoTime() < deadline) Thread.sleep(20)
+        assert(started.size == 1, s"${started.size} Spark jobs for 50 rows of page 0")
+        Thread.sleep(1000) // a page job still running after close() would show by now
+        assert(started.size == 1, s"${started.size} Spark jobs after close()")
+        assert(rt.liveJobIds.contains(h.jobId))
+      } finally spark.sparkContext.removeSparkListener(listener)
     }
   }
 

@@ -379,10 +379,10 @@ class LocalClusterSpec extends AnyFunSuite with BeforeAndAfterAll {
     // run on local[n]. Here the full client protocol — auth handshake,
     // submit, per-partition text fetch, LZ4-Arrow IPC fetch, cancel —
     // drives a runtime whose page-cached result partitions belong to the
-    // two REMOTE executor JVMs (the Arrow encode is driver-side from
-    // fetched rows, which this proves rather than assumes).
-    val rt = new JobRuntime(cluster, GatewayConfig())
-    val srv = new gateway.GatewayServer(rt, arrowBatchRows = 256)
+    // two REMOTE executor JVMs (the Arrow pages are encoded there and
+    // fetched as cached bytes, which this proves rather than assumes).
+    val rt = new JobRuntime(cluster, GatewayConfig(fetchPageSize = 256))
+    val srv = new gateway.GatewayServer(rt)
     val sock = new java.net.Socket("127.0.0.1", srv.boundPort)
     try {
       val rawIn = new java.io.BufferedInputStream(sock.getInputStream)

@@ -22,6 +22,12 @@ least nine tenths of the pairs AND the medians differ by more than the
 distance between A's quartiles; otherwise the metric is "no claim". Runs
 of fewer than 10 pairs compare the sides but claim nothing ("too few
 pairs"): use them to check that a workload did not move.
+Each end-to-end metric also gets a regression verdict from its `bound` in
+BENCHMARK.json, the verdict a change that claims no gain is judged by:
+"B worse" when B's median is worse than A's by more than bound x A's
+median; "unresolved" when A's quartile spread is wider than that, unless
+every B run beats every A run; "within bound" otherwise. Per-layer
+metrics have no bound and get no such verdict.
 Every run's correctness and failed-operation count is printed too, and no
 metric is claimed ("no claim") when any B run is incorrect or incomplete,
 or when B's runs fail more operations in total than A's.
@@ -65,12 +71,22 @@ def checkout(ref, tmproot, made):
     return path
 
 
+def benchmark(root):
+    """The checkout's BENCHMARK.json."""
+    with open(os.path.join(root, "BENCHMARK.json")) as f:
+        return json.load(f)
+
+
 def directions(root):
     """metric name -> "higher" | "lower", from the checkout's BENCHMARK.json."""
-    with open(os.path.join(root, "BENCHMARK.json")) as f:
-        bench = json.load(f)
+    bench = benchmark(root)
     return {m["name"]: m["better"]
             for m in bench.get("end_to_end", []) + bench.get("per_layer", [])}
+
+
+def bounds(root):
+    """end-to-end metric name -> its relative bound, from BENCHMARK.json."""
+    return {m["name"]: m["bound"] for m in benchmark(root).get("end_to_end", [])}
 
 
 def run_once(root, workload, seed, seconds, trace):
@@ -128,8 +144,21 @@ def disqualified(runs):
     return None
 
 
-def summarize(runs, better):
-    """Per metric: both sides' quartiles, B's pair wins, and the verdict."""
+def regression(a_vals, b_vals, sign, bound):
+    """The bound verdict of one end-to-end metric (see the module doc)."""
+    qa, qb = quartiles(a_vals), quartiles(b_vals)
+    allowed = bound * abs(qa[1])
+    if sign * (qb[1] - qa[1]) < -allowed:
+        return "B worse"
+    if qa[2] - qa[0] > allowed and not all(sign * (b - a) > 0
+                                           for a in a_vals for b in b_vals):
+        return "unresolved"
+    return "within bound"
+
+
+def summarize(runs, better, bound):
+    """Per metric: both sides' quartiles, B's pair wins, the verdict and,
+    for an end-to-end metric, its regression verdict."""
     blocked = disqualified(runs)
     out = {}
     names = sorted({k for pair in runs for r in pair if r for k in r["metrics"]})
@@ -153,6 +182,9 @@ def summarize(runs, better):
                      "a": qa, "b": qb, "b_wins": wins, "b_losses": losses,
                      "ratio": qb[1] / qa[1] if qa[1] else None,
                      "verdict": verdict}
+        if name in bound:
+            out[name]["regression"] = regression([a for a, _ in pairs], [b for _, b in pairs],
+                                                 sign, bound[name])
     return out
 
 
@@ -178,7 +210,7 @@ def main():
     try:
         roots = [checkout(args.ref_a, tmproot, made),
                  checkout(args.ref_b, tmproot, made)]
-        better = directions(roots[0])
+        better, bound = directions(roots[0]), bounds(roots[0])
         runs = []
         for i, seed in enumerate(seeds[:args.pairs]):
             order = (0, 1) if i % 2 == 0 else (1, 0)
@@ -193,7 +225,7 @@ def main():
                 print(f"pair {i + 1}/{args.pairs} seed {seed} "
                       f"({'AB' if order == (0, 1) else 'BA'}) {side}: {state}",
                       flush=True)
-        report = summarize(runs, better)
+        report = summarize(runs, better, bound)
         print(f"\n{args.workload}: A={args.ref_a} B={args.ref_b}, "
               f"{len(runs)} pairs, median [q1-q3]")
         blocked = disqualified(runs)
@@ -205,7 +237,8 @@ def main():
             print(f"  {name:32s} A {a[1]:.6g} [{a[0]:.6g}-{a[2]:.6g}]  "
                   f"B {b[1]:.6g} [{b[0]:.6g}-{b[2]:.6g}]  B/A {ratio}  "
                   f"B wins {m['b_wins']}/{m['pairs']} ({m['better']} is better)"
-                  f"  -> {m['verdict']}")
+                  f"  -> {m['verdict']}"
+                  + (f"; bound {bound[name]:g}: {m['regression']}" if "regression" in m else ""))
         if args.metric:
             print("\n".join(pair_table(runs, seeds, args.metric)))
         if args.json:
