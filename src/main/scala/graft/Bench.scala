@@ -29,6 +29,8 @@ import graft.Json.jstr
   *     [[BenchGate.MAX_PASSES]] passes while every pass reads
   *     contaminated, and a final `gate` verdict ("clean" iff ≥1 pass ran
   *     with external share under [[BenchGate.EXT_LOAD_GATE]]);
+  *   - the line carries `cpus`, the session's `defaultParallelism`, so
+  *     records taken on different hosts or core counts read apart;
   *   - the official line carries PER-QUERY gc_ms / io_read_mb witness
   *     maps for the slowest queries that fit the driver's stdout budget
   *     (VERDICT r14 missing #2: run-level witnesses only attributed
@@ -45,6 +47,7 @@ object Bench {
     * ioReadMbOfMinPass, firstError), plus the witness columns. */
   private final case class SuiteRecord(
       timed: Seq[(String, Double, Long, Long, Option[String])],
+      cpus: Int,
       passCount: Int,
       extLoads: Seq[Double],
       gate: String,
@@ -186,7 +189,7 @@ object Bench {
       val (sec, gc, io, _) = runs.minBy(_._1)
       (n, sec, gc, io, runs.flatMap(_._4).headOption)
     }
-    SuiteRecord(timed, passes.size, extLoads.toSeq,
+    SuiteRecord(timed, spark.sparkContext.defaultParallelism, passes.size, extLoads.toSeq,
       BenchGate.verdict(extLoads.toSeq),
       math.rint(quiesceWaitMs / 100.0) / 10,
       loadStart, loadMax, gcStart, gcEnd, heapStart, heapEnd, upStart, upEnd,
@@ -227,7 +230,7 @@ object Bench {
       .map { case (n, _, _, i, _) => s"${jstr(n)}:$i" }
       .mkString(""","io_read_mb":{""", ",", "}")
     s"""{"metric":"total","value":$total,"unit":"sec","n":${r.timed.size},""" +
-      s""""passes":${r.passCount},""" +
+      s""""cpus":${r.cpus},"passes":${r.passCount},""" +
       s""""load_avg_start":${math.rint(r.loadStart * 100) / 100},""" +
       s""""load_avg_max":${math.rint(r.loadMax * 100) / 100},$witness,""" +
       s""""queries":$m$gc$io,"errors":$errs,"sf":${jstr(sfDir)}}"""
@@ -260,15 +263,10 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    // Optional args: bench only the named queries (dev iteration); an
+    // official run passes none and times the full suite.
+    val names = SparkEntry.select(SparkEntry.queries.keys, args.toSeq)
     val spark = Sessions.local()
-
-    // Optional args: bench only the named queries (dev iteration); the
-    // driver passes none and times the full suite. Unknown names abort:
-    // a typo must not produce a clean-looking empty run.
-    val names0 = SparkEntry.queries.keys.toSeq.sorted
-    val unknown = args.toSet -- names0
-    require(unknown.isEmpty, s"unknown queries: ${unknown.mkString(", ")}")
-    val names = if (args.isEmpty) names0 else names0.filter(args.toSet)
 
     val rec = runSuite(spark, sfDir, names)
 
@@ -370,18 +368,8 @@ object Bench {
     if (!cp.contains("spark-sql")) return None
     val javaBin = java.nio.file.Paths.get(
       sys.props("java.home"), "bin", "java").toString
-    // Mirror build.sbt's JDK17 module opens (Spark 4 outside spark-submit).
-    val addOpens = Seq(
-      "java.base/java.lang", "java.base/java.lang.invoke",
-      "java.base/java.lang.reflect", "java.base/java.io",
-      "java.base/java.net", "java.base/java.nio",
-      "java.base/java.util", "java.base/java.util.concurrent",
-      "java.base/java.util.concurrent.atomic",
-      "java.base/sun.nio.ch", "java.base/sun.nio.cs",
-      "java.base/sun.security.action", "java.base/sun.util.calendar"
-    ).flatMap(p => Seq("--add-opens", s"$p=ALL-UNNAMED"))
     val heapMb = math.max(2048L, Runtime.getRuntime.maxMemory() >> 20)
-    val cmd = (Seq(javaBin) ++ addOpens ++ Seq(
+    val cmd = (Seq(javaBin) ++ Sessions.jdkOpens ++ Seq(
       s"-Xmx${heapMb}m",
       "-Dspark.ui.enabled=false", "-Dspark.sql.session.timeZone=UTC",
       "-cp", cp, "graft.Bench")).toArray

@@ -54,35 +54,15 @@ object ClusterParity {
   /** Correct-answer-differs-by-topology set (see scaladoc). */
   private val topologyDependent = Set("q_cluster_nodes")
 
-  private val addOpens = Seq(
-    "java.base/java.lang", "java.base/java.lang.invoke",
-    "java.base/java.lang.reflect", "java.base/java.io",
-    "java.base/java.net", "java.base/java.nio",
-    "java.base/java.util", "java.base/java.util.concurrent",
-    "java.base/java.util.concurrent.atomic",
-    "java.base/sun.nio.ch", "java.base/sun.nio.cs",
-    "java.base/sun.security.action", "java.base/sun.util.calendar",
-  ).map(p => s"--add-opens=$p=ALL-UNNAMED").mkString(" ")
-
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
-    val only = args.drop(1).toSet
-    val unknown = only -- SparkEntry.queries.keySet
-    require(unknown.isEmpty, s"unknown queries: ${unknown.mkString(", ")}")
-    val names = SparkEntry.queries.keys.toSeq.sorted
-      .filter(n => only.isEmpty || only(n))
+    val names = SparkEntry.select(SparkEntry.queries.keys, args.drop(1).toSeq)
 
     val t0 = System.nanoTime()
     // Phase 1: plain local — 8 threads to match the cluster's 2x4 cores,
     // so shuffle-partition-count-sensitive output (none is known, but the
     // probe must not manufacture a false divergence) is held equal.
-    val local = {
-      val s = Sessions.configure(
-        SparkSession.builder().master("local[8]"), "8").getOrCreate()
-      s.sparkContext.setLogLevel("WARN")
-      Sessions.registerGridWitness(s)
-      s
-    }
+    val local = Sessions.local("8")
     val expected = names.map { n =>
       n -> (try Right(digest(SparkEntry.queries(n)(local, sfDir)))
             catch { case e: Throwable => Left(s"local: ${e.getMessage}") })
@@ -94,17 +74,11 @@ object ClusterParity {
 
     // Phase 2: two real executor JVMs.
     val t1 = System.nanoTime()
-    val cluster = {
-      val b = SparkSession.builder()
-        .master("local-cluster[2,4,4096]")
-        .config("spark.executor.memory", "3g")
-        .config("spark.executor.extraClassPath", sys.props("java.class.path"))
-        .config("spark.executor.extraJavaOptions", addOpens)
-      val s = Sessions.configure(b, "8").getOrCreate()
-      s.sparkContext.setLogLevel("WARN")
-      Sessions.registerGridWitness(s)
-      s
-    }
+    val cluster = Sessions.start(SparkSession.builder()
+      .master("local-cluster[2,4,4096]")
+      .config("spark.executor.memory", "3g")
+      .config("spark.executor.extraClassPath", sys.props("java.class.path"))
+      .config("spark.executor.extraJavaOptions", Sessions.jdkOpens.mkString(" ")), "8")
     // Launch barrier: both executor JVMs registered and running tasks.
     require(cluster.range(0, 64, 1, 8).count() == 64)
     require(cluster.sparkContext.statusTracker.getExecutorInfos.length == 3,

@@ -18,7 +18,11 @@ import org.apache.spark.sql.functions._
   * property the banded candidate strategies must track without
   * quadratic candidate blowup.
   *
-  * Usage: runMain graft.ScaleProbe <srcSfDir> <workDir>
+  * Usage: runMain graft.ScaleProbe <srcSfDir> <workDir> [queries...]
+  *
+  * Named queries (SparkEntry or probe-only builders below) narrow a run to
+  * them, for iterating on one operator's scaling law without paying for
+  * the whole family; an unknown name aborts.
   */
 object ScaleProbe {
   private val probeQueries = Seq("q_dedup_exact", "q_dedup_ngram",
@@ -274,16 +278,10 @@ object ScaleProbe {
 
   def main(args: Array[String]): Unit = {
     val (srcDir, workDir) = (args(0), args(1))
+    val only = SparkEntry.select(SparkEntry.queries.keys ++ extraBuilders.keys,
+      args.drop(2).toSeq).toSet
+    def keep(qs: Seq[String]): Seq[String] = qs.filter(only)
     val spark = Sessions.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-
-    // --- corpus generation (shared with SfScale) ---------------------
-    def generate(n: Int, out: String): Unit =
-      CorpusGen.documents(spark, srcDir, n, out)
-    def generateEmbeddings(n: Int, out: String): Unit =
-      CorpusGen.embeddings(spark, n, out)
-    def generateEvents(nUsers: Int, out: String,
-        hot: (Int, Int) = (1, 100)): Unit =
-      CorpusGen.events(spark, srcDir, nUsers, out, hot)
 
     // --- instrumented run ----------------------------------------------
     val shuffleBytes = new java.util.concurrent.atomic.AtomicLong(0)
@@ -322,14 +320,6 @@ object ScaleProbe {
         }
     }
     spark.sparkContext.addSparkListener(listener)
-
-    // SPARK_GRAFT_PROBE_QUERIES=q_a,q_b narrows a probe run to the named
-    // queries (iterating on one operator's scaling law without paying for
-    // the whole family).
-    val only = sys.env.get("SPARK_GRAFT_PROBE_QUERIES")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    def keep(qs: Seq[String]): Seq[String] =
-      only.fold(qs)(o => qs.filter(o.contains))
 
     // Each query runs through the noop SINK, not count(): count() lets
     // Catalyst prune every column nothing consumes — for the window-over-
@@ -371,11 +361,11 @@ object ScaleProbe {
       }
 
     val n1 = 5000
-    generate(n1, s"$workDir/g1x")
-    generate(n1 * 10, s"$workDir/g10x")
+    CorpusGen.documents(spark, srcDir, n1, s"$workDir/g1x")
+    CorpusGen.documents(spark, srcDir, n1 * 10, s"$workDir/g10x")
     val e1 = 2000 // the sf0.1 embeddings row count
-    generateEmbeddings(e1, s"$workDir/g1x")
-    generateEmbeddings(e1 * 10, s"$workDir/g10x")
+    CorpusGen.embeddings(spark, e1, s"$workDir/g1x")
+    CorpusGen.embeddings(spark, e1 * 10, s"$workDir/g10x")
     // Pre-warm the corpus-size cache for every embeddings corpus OUTSIDE
     // any timed wall: g10x/g100x get no warm pass, so the adaptive-k
     // builder's first N lookup would otherwise run a count job inside its
@@ -383,8 +373,8 @@ object ScaleProbe {
     pipeline.Similarity.corpusSize(spark, s"$workDir/g1x")
     pipeline.Similarity.corpusSize(spark, s"$workDir/g10x")
     val u1 = 20000 // users at 1x; events = users x empirical per-user mean
-    generateEvents(u1, s"$workDir/g1x")
-    generateEvents(u1 * 10, s"$workDir/g10x")
+    CorpusGen.events(spark, srcDir, u1, s"$workDir/g1x")
+    CorpusGen.events(spark, srcDir, u1 * 10, s"$workDir/g10x")
     println(s"generated g1x=$n1 docs/$e1 vecs, g10x=${n1 * 10} docs/${e1 * 10} vecs, " +
       s"events for $u1/${u1 * 10} users")
     run(s"$workDir/g1x", "warm1x") // warmup (JIT, codegen)
@@ -407,7 +397,7 @@ object ScaleProbe {
         // one-time store write (same train-once discipline as IVF)
         "q_dedup_incremental",
         // train the same k=16 coarse quantizer q_ann_ivf shares; listed
-        // separately so a PROBE_QUERIES-narrowed silhouette/purity run
+        // separately so a narrowed silhouette/purity run
         // still gets its centroids warmed at the decade
         "q_silhouette", "q_cluster_purity",
         // r12 content-keyed trainer/score stores (the same train-once
@@ -475,15 +465,16 @@ object ScaleProbe {
       val decaEvents = Seq("q_asof_join", "q_asof_chunked", "q_funnel",
         "q_sessionize", "q_sessionize_chunked")
       // Generate only the corpora a kept query will read — a narrowed
-      // PROBE_QUERIES run must not pay the 500k-doc driver-side build.
+      // run must not pay the 500k-doc driver-side build.
       // hybrid lives in decaSim (vector-side law) but reads documents too
       if (keep(decaDocs ++ lateQueries ++ Seq("q_hybrid_retrieval")).nonEmpty)
-        generate(n1 * 100, s"$workDir/g100x")
+        CorpusGen.documents(spark, srcDir, n1 * 100, s"$workDir/g100x")
       if (keep(decaSim).nonEmpty) {
-        generateEmbeddings(e1 * 100, s"$workDir/g100x")
+        CorpusGen.embeddings(spark, e1 * 100, s"$workDir/g100x")
         pipeline.Similarity.corpusSize(spark, s"$workDir/g100x")
       }
-      if (keep(decaEvents).nonEmpty) generateEvents(u1 * 100, s"$workDir/g100x")
+      if (keep(decaEvents).nonEmpty)
+        CorpusGen.events(spark, srcDir, u1 * 100, s"$workDir/g100x")
       println(s"generated g100x (docs/vecs/events as kept)")
       // Train-once warm for IVF (same rationale as warm10x above): its
       // coarse-quantizer training is one-time per (corpus, k) and must
@@ -522,10 +513,10 @@ object ScaleProbe {
     if (sys.env.get("SPARK_GRAFT_PROBE_HOTUSER").contains("1")) {
       val hotQs = Seq("q_asof_join", "q_asof_chunked", "q_asof_chunked_6h",
         "q_sessionize", "q_sessionize_chunked", "q_sessionize_chunked_6h")
-      // Same rule as the 100x block: a narrowed PROBE_QUERIES run must
-      // not pay the 13M-event generate+write for an empty table.
+      // Same rule as the 100x block: a narrowed run must not pay the
+      // 13M-event generate+write for an empty table.
       if (keep(hotQs).nonEmpty) {
-        generateEvents(u1 * 10, s"$workDir/ghot", hot = (30, 100))
+        CorpusGen.events(spark, srcDir, u1 * 10, s"$workDir/ghot", hot = (30, 100))
         println(s"generated ghot: ${u1 * 10} users, user 0 carrying ~30% of events")
         run(s"$workDir/ghot", "warmhot", hotQs)
         val rh = run(s"$workDir/ghot", "ghot", hotQs)

@@ -29,12 +29,31 @@ object Sessions {
       // (reference `dist/src/executor.rs:26-108`, `tests/exception.rs:96-103`).
       .config("spark.scheduler.mode", "FAIR")
 
-  def local(cpus: String = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")): SparkSession = {
-    val s = configure(SparkSession.builder().master(s"local[$cpus]"), cpus).getOrCreate()
+  def local(cpus: String = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")): SparkSession =
+    start(SparkSession.builder().master(s"local[$cpus]"), cpus)
+
+  /** Start (or join) a configured session on any master: WARN logging,
+    * the grid witness and the UDAFs, as every entry point needs. */
+  def start(b: SparkSession.Builder, cpus: String): SparkSession = {
+    val s = configure(b, cpus).getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     registerGridWitness(s)
     s
   }
+
+  /** JDK 17 module opens Spark 4 needs outside spark-submit, as JVM flags
+    * for a JVM this process launches (a Bench child, a local-cluster
+    * executor). Matches build.sbt's `jdk17AddOpens` and
+    * `org.apache.spark.launcher.JavaModuleOptions.defaultModuleOptions()`. */
+  val jdkOpens: Seq[String] = Seq(
+    "java.base/java.lang", "java.base/java.lang.invoke",
+    "java.base/java.lang.reflect", "java.base/java.io",
+    "java.base/java.net", "java.base/java.nio",
+    "java.base/java.util", "java.base/java.util.concurrent",
+    "java.base/java.util.concurrent.atomic",
+    "java.base/sun.nio.ch", "java.base/sun.nio.cs",
+    "java.base/sun.security.action", "java.base/sun.util.calendar",
+  ).map(p => s"--add-opens=$p=ALL-UNNAMED")
 
   /** Per-session one-time registration of UDAF-API functions. Codegen
     * expressions register via [[GraftExtensions]] (injectFunction), but the

@@ -27,6 +27,16 @@ object SparkEntry {
   def queries: Map[String, (SparkSession, String) => DataFrame] =
     defs.map(q => q.name -> q.build).toMap
 
+  /** The names a tool runs: every `known` name, sorted, when none is
+    * `asked` for, else the asked names, sorted and distinct. Any unknown
+    * name aborts: a typo must not exit 0 having run nothing. */
+  def select(known: Iterable[String], asked: Seq[String]): Seq[String] = {
+    val unknown = asked.distinct.filterNot(known.toSet)
+    if (unknown.nonEmpty)
+      throw new IllegalArgumentException(s"unknown queries: ${unknown.mkString(", ")}")
+    (if (asked.isEmpty) known.toSeq else asked).distinct.sorted
+  }
+
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omitted for non-SQL-expressible ops. */
   def oracleSql: Map[String, String] =

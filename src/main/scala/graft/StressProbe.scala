@@ -1,16 +1,13 @@
 package graft
 
-import java.io.{BufferedReader, InputStreamReader, PrintWriter}
-import java.net.Socket
-import java.nio.charset.StandardCharsets
 import java.util.concurrent.Executors
 import java.util.concurrent.atomic.AtomicLong
 
-import graft.Json.jstr
-import graft.gateway.{GatewayServer, JobRuntime}
+import graft.gateway.{GatewayClient, GatewayServer, JobRuntime}
 
-/** Concurrency-at-scale probe: drives the REAL socket gateway (TCP
-  * handshake -> submit -> per-partition text fetch) with N concurrent
+/** Concurrency-at-scale probe: drives the REAL socket gateway through
+  * [[gateway.GatewayClient]] (handshake -> submit -> per-partition text
+  * fetch, transport failures retried and counted) with N concurrent
   * analytical queries against an arbitrary sf directory, and prints one
   * JSON line with the wall and the reference's envelope.
   *
@@ -69,9 +66,8 @@ object StressProbe {
     val nQueries = args.lift(1).map(_.toInt).getOrElse(50)
     val nClients = args.lift(2).map(_.toInt).getOrElse(25)
     val spark = Sessions.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-    for (t <- Seq("lineitem", "orders", "customer", "supplier", "part",
-        "nation", "region", "events", "documents"))
-      Tables.t(spark, sfDir, t).createOrReplaceTempView(t)
+    Tables.register(spark, sfDir, "lineitem", "orders", "customer", "supplier",
+      "part", "nation", "region", "events", "documents")
     // Warm pass: JIT + parquet footer caches, like Bench's, so the timed
     // window measures concurrency behavior rather than first-touch cost.
     workload.foreach(sql => spark.sql(sql).collect())
@@ -79,29 +75,10 @@ object StressProbe {
     val rt = new JobRuntime(spark)
     val srv = new GatewayServer(rt)
     val rows = new AtomicLong(0)
+    // Transport failures the clients retried (each retry is one backoff
+    // sleep); an `ok:false` answer is not retried and fails the run.
+    val retries = new AtomicLong(0)
     val failures = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-
-    def runOne(sql: String, in: BufferedReader, out: PrintWriter): Unit = {
-      out.println(s"""{"op": "submit", "sql": ${jstr(sql)}}""")
-      val resp = in.readLine()
-      require(resp != null && resp.contains("\"ok\": true"), s"submit failed: $resp")
-      val jobId = """"job_id": "([^"]+)"""".r.findFirstMatchIn(resp).get.group(1)
-      val nParts = """"partitions": (\d+)""".r.findFirstMatchIn(resp).get.group(1).toInt
-      var got = 0L
-      for (p <- 0 until nParts) {
-        out.println(s"""{"op": "fetch", "job_id": "$jobId", "partition": $p}""")
-        var line = in.readLine()
-        // Skip the r16 stream header (computation-token line).
-        if (line != null && line.contains("\"format\": \"rows\"")) line = in.readLine()
-        while (line != null && line.startsWith("{\"row\"")) {
-          got += 1; line = in.readLine()
-        }
-        require(line != null && line.contains("\"ok\": true"), s"fetch failed: $line")
-      }
-      require(got > 0, s"query returned no rows: $sql")
-      rows.addAndGet(got)
-      ()
-    }
 
     val pool = Executors.newFixedThreadPool(nClients)
     val loadStart = loadAvg()
@@ -110,22 +87,18 @@ object StressProbe {
       val futs = (0 until nClients).map { c =>
         pool.submit(new Runnable {
           def run(): Unit = {
-            val sock = new Socket("127.0.0.1", srv.boundPort)
-            val in = new BufferedReader(new InputStreamReader(
-              sock.getInputStream, StandardCharsets.UTF_8))
-            val out = new PrintWriter(sock.getOutputStream, true)
+            val client = new GatewayClient("127.0.0.1", () => srv.boundPort,
+              sleeper = ms => { retries.incrementAndGet(); Thread.sleep(ms) })
             try {
-              out.println("""{"op": "handshake", "user": "admin", "password": "admin123"}""")
-              val hs = in.readLine()
-              require(hs != null && hs.contains("\"ok\": true"), s"handshake failed: $hs")
-              var q = c
-              while (q < nQueries) {
-                runOne(workload(q % workload.size), in, out)
-                q += nClients
+              for (q <- c until nQueries by nClients) {
+                val sql = workload(q % workload.size)
+                val got = client.fetchAll(sql).size
+                require(got > 0, s"query returned no rows: $sql")
+                rows.addAndGet(got)
               }
             } catch {
               case e: Throwable => failures.add(s"client $c: ${e.getMessage}")
-            } finally sock.close()
+            } finally client.close()
           }
         })
       }
@@ -135,7 +108,7 @@ object StressProbe {
       require(rt.liveJobIds.isEmpty, "jobs not cleaned after completion")
       println(s"""{"metric":"stress_gateway","value":${math.rint(sec * 1000) / 1000},""" +
         s""""unit":"sec","queries":$nQueries,"clients":$nClients,""" +
-        s""""rows":${rows.get()},"envelope_sec":180,""" +
+        s""""rows":${rows.get()},"retries":${retries.get()},"envelope_sec":180,""" +
         s""""load_avg_start":${math.rint(loadStart * 100) / 100},""" +
         s""""sf":"$sfDir"}""")
     } finally {

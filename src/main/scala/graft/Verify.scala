@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -8,18 +7,14 @@ object Verify {
     val (sfDir, outDir) = (args(0), args(1))
     // Optional extra args: run only the named queries (dev iteration);
     // the driver passes exactly two args and gets the full suite.
-    // Unknown names abort: a typo must not exit 0 having verified nothing.
-    val only = args.drop(2).toSet
-    val unknown = only -- SparkEntry.queries.keySet
-    require(unknown.isEmpty, s"unknown queries: ${unknown.mkString(", ")}")
+    val names = SparkEntry.select(SparkEntry.queries.keys, args.drop(2).toSeq)
     val spark = Sessions.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
     new java.io.File(outDir).mkdirs()
-    SparkEntry.queries
-      .filter { case (name, _) => only.isEmpty || only(name) }
-      .foreach { case (name, fn) =>
+    val queries = SparkEntry.queries
+    names.foreach { name =>
       // repartition(1) (not coalesce): keeps the query's own stages at full
       // parallelism and only funnels the final (small) result to one file.
-      try fn(spark, sfDir).repartition(1).write.mode("overwrite")
+      try queries(name)(spark, sfDir).repartition(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
       catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")

@@ -702,4 +702,12 @@ class PlanSpec extends SparkSpec {
     assert(!plan.contains("Generate"),
       s"corpus bigram explode leaked back into the query plan:\n$plan")
   }
+
+  test("PlanDump renders the final adaptive plan of the run it made") {
+    val qe = PlanDump.executed(spark, sfDir, "q_tpch_q9")
+    val plan = qe.explainString(org.apache.spark.sql.execution.FormattedMode)
+    assert(plan.contains("isFinalPlan=true"), plan)
+    assert(!spark.sparkContext.isStopped)
+    assert(PlanDump.condensed(qe).exists(_.contains("Exchange")), plan)
+  }
 }

@@ -240,4 +240,22 @@ class QueriesSpec extends SparkSpec {
     assert(Tables.t(spark, sfDir, "events").schema("ts").dataType ==
       org.apache.spark.sql.types.LongType)
   }
+
+  test("query selection: all known names sorted by default, extra known " +
+      "names accepted, every unknown name aborts") {
+    val known = SparkEntry.queries.keys
+    assert(SparkEntry.select(known, Nil) == known.toSeq.sorted)
+    assert(SparkEntry.select(known, Seq("q1_agg", "q_tpch_q9", "q1_agg")) ==
+      Seq("q1_agg", "q_tpch_q9"))
+    // A tool's own builders (ScaleProbe's probe-only ones) are known too.
+    val extra = Seq("q_fuzzy_cands_r8")
+    assert(SparkEntry.select(known ++ extra, Seq("q_fuzzy_cands_r8", "q1_agg")) ==
+      Seq("q1_agg", "q_fuzzy_cands_r8"))
+    assert(SparkEntry.select(known ++ extra, Nil).contains("q_fuzzy_cands_r8"))
+    val e = intercept[IllegalArgumentException](
+      SparkEntry.select(known, Seq("q_nope", "q1_agg", "q_typo")))
+    assert(e.getMessage.contains("q_nope") && e.getMessage.contains("q_typo"), e.getMessage)
+    assert(!e.getMessage.contains("q1_agg"), e.getMessage)
+    intercept[IllegalArgumentException](SparkEntry.select(known, Seq("q_fuzzy_cands_r8")))
+  }
 }
