@@ -4,6 +4,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{col, unix_micros}
 import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
 
+import java.util.concurrent.{CompletableFuture, CompletionException, ConcurrentHashMap}
+import java.util.concurrent.atomic.AtomicLong
+
 /** Loaders for the driver-generated parquet tables (see TESTDATA.md).
   *
   * All query builders take `(spark, sfDir)` and read through here, so the
@@ -152,59 +155,88 @@ object Tables {
     catch { case _: java.io.IOException => () }
   }
 
-  /** Content-keyed temp-parquet materialization — THE shared discipline
-    * for per-corpus derived stores (the shingle index, cluster labels):
-    * one persisted copy per input path per JVM, keyed on [[contentToken]]
-    * so an in-place regen rebuilds instead of serving stale data.
-    *
-    * Rebuild protocol is build-to-fresh-dir THEN swap THEN delete: the
-    * superseded directory is deleted only AFTER the replacement build
-    * succeeded, so a failed rebuild leaves the map still holding the old
-    * (token, dir) entry with its directory intact — a later query at the
-    * old content (or a retry) keeps working instead of dereferencing a
-    * deleted path. A build FAILURE deletes only the half-written fresh
-    * directory before rethrowing (a designed failure like non-convergence
-    * must not leak a temp dir per retry on a long-lived gateway);
-    * `compute` leaves the mapping unchanged when the function throws.
-    * Same-key concurrent callers serialize on the bin — deliberate (one
-    * build, the rest wait for it rather than racing duplicate Spark
-    * jobs); distinct corpus paths rarely share a bin in a map this small.
-    * A shutdown hook reclaims live copies. */
-  /** `variant` distinguishes parameterized builds over the SAME input path
-    * (e.g. a pair store at threshold t) — it extends the cache key only;
-    * the freshness token always comes from the real `path` contents, so a
-    * regenerated corpus evicts every variant's store. */
-  /** Count of store BUILDS (cache misses that ran a Spark write) across
-    * every [[contentKeyedTempParquet]] cache in the JVM — the observable
-    * the reuse specs assert on: "the second consumer did not rebuild" is
-    * `tempBuildCount` unchanged across its run, which no timing heuristic
-    * can state as crisply. */
-  private[graft] val tempBuilds = new java.util.concurrent.atomic.AtomicLong(0L)
+  /** Count of store BUILDS (table misses that ran a Spark write) across
+    * the store table — the observable the reuse specs assert on: "the
+    * second consumer did not rebuild" is `tempBuildCount` unchanged across
+    * its run, which no timing heuristic can state as crisply. */
+  private[graft] val tempBuilds = new AtomicLong(0L)
   private[graft] def tempBuildCount: Long = tempBuilds.get()
 
-  /** JVM-wide occupancy registry over every [[contentKeyedTempParquet]]
-    * store (VERDICT r12 missing #2): the content-keyed discipline bounds
-    * STALENESS (a regen rebuilds) but not GROWTH — a long-lived gateway
-    * JVM that serves many distinct corpora accumulates one persisted
-    * relation per (corpus content, params) key without limit. This
-    * registry records every live store directory with its on-disk bytes
-    * and an access sequence, and [[enforceStoreBudget]] evicts
-    * least-recently-accessed entries past the count/byte caps — the same
-    * leak-bound discipline as the job registry's TTL sweeper and
-    * [[KEYED_ONCE_CAP]]. Eviction is safe by construction: entries are
-    * content-keyed, so a dropped store costs one rebuild on next access,
-    * never staleness; the entry just served is always the newest-touched
-    * and never the victim. */
-  private[graft] final case class StoreEntry(
-      cache: java.util.concurrent.ConcurrentHashMap[String, (String, String)],
-      key: String, token: String, store: String, dir: String, bytes: Long,
-      lastAccess: java.util.concurrent.atomic.AtomicLong)
+  /** Run `build` once per key with no map lock held — the one discipline
+    * of the store table, the catalog stores and every [[keyedOnce]]
+    * cache. The caller that installs an in-flight future (a plain
+    * `putIfAbsent`/`replace`: no remapping function ever runs work) runs
+    * the build; concurrent callers for the key await that future and see
+    * its exception if it fails. A completed value that `fresh` rejects is
+    * rebuilt, and the build gets it as `prev` to retire once its own
+    * result is ready. On failure the previous value (or no mapping) is put
+    * back, so a later call retries and a stale-but-intact entry keeps
+    * serving. Builds nest freely across keys (the pair store's build reads
+    * the shingle index): nothing is locked while they run. Evictors take
+    * only completed values, so no in-flight build is raced by a duplicate. */
+  @annotation.tailrec
+  private def buildOnce[K, V](map: ConcurrentHashMap[K, CompletableFuture[V]], key: K)
+      (fresh: V => Boolean)(build: Option[V] => V): V = {
+    val seen = map.get(key)
+    val prev = Option(seen).map(await)
+    if (prev.exists(fresh)) prev.get
+    else {
+      val mine = new CompletableFuture[V]()
+      val won =
+        if (seen == null) map.putIfAbsent(key, mine) == null
+        else map.replace(key, seen, mine)
+      if (!won) buildOnce(map, key)(fresh)(build)
+      else try {
+        val v = build(prev)
+        mine.complete(v)
+        v
+      } catch {
+        case e: Throwable =>
+          if (seen == null) map.remove(key, mine) else map.replace(key, mine, seen)
+          mine.completeExceptionally(e)
+          throw e
+      }
+    }
+  }
 
-  private[graft] val storeRegistry =
-    new java.util.concurrent.ConcurrentHashMap[String, StoreEntry]()
-  private val storeSeq = new java.util.concurrent.atomic.AtomicLong(0L)
-  private[graft] val storeEvictions =
-    new java.util.concurrent.atomic.AtomicLong(0L)
+  private def await[V](f: CompletableFuture[V]): V =
+    try f.join()
+    catch { case e: CompletionException => throw Option(e.getCause).getOrElse(e) }
+
+  /** The completed values of a [[buildOnce]] map, with key and slot. */
+  private def completed[K, V](map: ConcurrentHashMap[K, CompletableFuture[V]])
+      : Seq[(K, CompletableFuture[V], V)] = {
+    val out = scala.collection.mutable.ArrayBuffer.empty[(K, CompletableFuture[V], V)]
+    map.forEach((k, f) =>
+      if (f.isDone && !f.isCompletedExceptionally) out += ((k, f, f.join())))
+    out.toSeq
+  }
+
+  /** One content-keyed store: `store` is its family's prefix, `key` the
+    * input path plus variant, `token` the [[contentToken]] it was built
+    * from, `dir` its parquet files, `lastAccess` the LRU sequence. */
+  private[graft] final case class StoreEntry(store: String, key: String,
+      token: String, dir: String, bytes: Long, lastAccess: AtomicLong)
+
+  /** THE store table: every content-keyed temp-parquet store in the JVM
+    * (shingle index, pair stores, cluster labels, tokenizer word tables,
+    * media payloads, ...), keyed by (store prefix, input path + variant),
+    * one persisted copy per key. The content-keyed discipline bounds
+    * STALENESS (a regen rebuilds); [[enforceStoreBudget]] bounds GROWTH —
+    * a long-lived gateway JVM that serves many distinct corpora would
+    * otherwise accumulate one store per (corpus content, params) key
+    * without limit. The LRU budget, the eviction grace window, the
+    * `store_occupancy` view, the test eviction hooks and the one shutdown
+    * hook all read this map and nothing else. Eviction is safe by
+    * construction: a dropped store costs one rebuild on next access, never
+    * staleness. */
+  private val stores =
+    new ConcurrentHashMap[(String, String), CompletableFuture[StoreEntry]]()
+  private val storeSeq = new AtomicLong(0L)
+  private[graft] val storeEvictions = new AtomicLong(0L)
+
+  /** Every completed store in the table. */
+  private[graft] def storeEntries: Seq[StoreEntry] = completed(stores).map(_._3)
 
   /** Caps, overridable by the budget specs. Defaults are a leak bound for
     * a long-lived gateway, far above one bench run's working set (a full
@@ -214,9 +246,9 @@ object Tables {
   @volatile private[graft] var storeCountCap: Int = 48
   @volatile private[graft] var storeBytesCap: Long = 16L << 30
 
-  /** Grace window between a store's EVICTION (registry row + cache entry
-    * dropped — occupancy stops counting it, the next access rebuilds) and
-    * the deletion of its FILES. Closes the serve→execute race (ADVICE r13
+  /** Grace window between a store's EVICTION (table entry dropped —
+    * occupancy stops counting it, the next access rebuilds) and the
+    * deletion of its FILES. Closes the serve→execute race (ADVICE r13
     * medium): `contentKeyedTempParquetKeyed` returns a LAZY DataFrame, so
     * a caller may execute its plan well after being served — and a
     * concurrent caller's budget enforcement (or, single-threaded, a query
@@ -233,7 +265,6 @@ object Tables {
   private[graft] final case class CondemnedStore(dir: String, deadline: Long)
   private[graft] val condemnedStores =
     new java.util.concurrent.ConcurrentLinkedQueue[CondemnedStore]()
-  sys.addShutdownHook(sweepCondemnedStores(force = true))
 
   /** Defer a superseded/evicted store directory's deletion by the grace
     * window (immediate when the window is 0). */
@@ -269,124 +300,108 @@ object Tables {
   } catch { case _: java.io.IOException => 0L }
 
   /** Occupancy snapshot for the observability view: (store, key, bytes,
-    * last access seq), registry order. */
-  private[graft] def storeOccupancySnapshot: Seq[(String, String, Long, Long)] = {
-    val out = scala.collection.mutable.ArrayBuffer.empty[(String, String, Long, Long)]
-    storeRegistry.values.forEach(e =>
-      out += ((e.store, e.key, e.bytes, e.lastAccess.get())))
-    out.toSeq
+    * last access seq), table order. */
+  private[graft] def storeOccupancySnapshot: Seq[(String, String, Long, Long)] =
+    storeEntries.map(e => (e.store, e.key, e.bytes, e.lastAccess.get()))
+
+  /** Drop a completed store from the table and condemn its files. The
+    * exact-slot remove loses (and touches no files) when a concurrent
+    * rebuild already replaced the entry — that rebuild retires the dir. */
+  private def evictStore(k: (String, String), f: CompletableFuture[StoreEntry],
+      e: StoreEntry): Boolean = {
+    val won = stores.remove(k, f)
+    if (won) condemnStoreDir(e.dir)
+    won
   }
 
-  /** Drop the registry row for a store directory WITHOUT deleting it —
-    * for callers that already deleted the files themselves (the test
-    * eviction hooks, the in-place rebuild path). */
-  private[graft] def deregisterStoreDir(dir: String): Unit = {
-    storeRegistry.remove(dir)
-    ()
-  }
+  /** Evict every completed store of the families `store` selects — the
+    * test hooks' way to force rebuilds. Grace-windowed like LRU eviction:
+    * a lazy plan served from one of these dirs may not have executed yet. */
+  private[graft] def evictStores(store: String => Boolean): Unit =
+    completed(stores).foreach { case (k, f, e) =>
+      if (store(e.store)) evictStore(k, f, e)
+    }
 
-  /** Evict least-recently-accessed stores until both caps hold. `keep` is
-    * the directory just served — never a victim, so the active caller's
-    * store survives even with a cap of 1. Removal races are settled by
-    * the cache's own bin lock: `remove(key, exact-value)` only wins when
-    * the entry is still the one this registry row describes; a row whose
-    * cache entry moved on (concurrent rebuild — which already deleted
-    * this dir and deregistered it) is dropped from the registry without
-    * touching files. Runs outside any cache's `compute` on purpose — a
-    * remove on cache A inside cache B's bin lock could deadlock two
-    * concurrent enforcement passes. */
-  private def enforceStoreBudget(keep: String): Unit = {
+  /** Evict least-recently-accessed completed stores until both caps hold.
+    * `keep` is the key just served — never a victim, so the active
+    * caller's store survives even with a cap of 1. In-flight builds are
+    * neither counted nor victims. Runs after the caller's build, outside
+    * every map lock. */
+  private def enforceStoreBudget(keep: (String, String)): Unit = {
     sweepCondemnedStores()
-    var guard = storeRegistry.size() + 1
-    while (guard > 0) {
-      guard -= 1
-      val entries = {
-        val b = scala.collection.mutable.ArrayBuffer.empty[StoreEntry]
-        storeRegistry.values.forEach(b += _)
-        b.toSeq
-      }
-      val over = entries.size > storeCountCap ||
-        entries.iterator.map(_.bytes).sum > storeBytesCap
-      if (!over) return
-      val victims = entries.filter(_.dir != keep)
+    var live = completed(stores)
+    while (live.size > storeCountCap ||
+        live.iterator.map(_._3.bytes).sum > storeBytesCap) {
+      val victims = live.filter(_._1 != keep)
       if (victims.isEmpty) return
-      val v = victims.minBy(_.lastAccess.get())
-      if (v.cache.remove(v.key, (v.token, v.dir))) {
-        // Eviction drops the bookkeeping NOW but the files only after the
-        // grace window — a concurrently-served lazy plan still reading
-        // this dir must not hit FileNotFound (ADVICE r13 medium).
-        condemnStoreDir(v.dir)
-        storeEvictions.incrementAndGet()
-      }
-      storeRegistry.remove(v.dir)
+      val v = victims.minBy(_._3.lastAccess.get())
+      if (evictStore(v._1, v._2, v._3)) storeEvictions.incrementAndGet()
+      live = live.filter(_._2 ne v._2)
     }
   }
 
+  /** Content-keyed temp-parquet materialization through the store table:
+    * one persisted copy per (store prefix, input path, variant) per JVM,
+    * keyed on [[contentToken]] so an in-place regen rebuilds instead of
+    * serving stale data. `variant` distinguishes parameterized builds over
+    * the SAME input path (e.g. a pair store at threshold t) — it extends
+    * the key only; the token always comes from the real `path` contents,
+    * so a regenerated corpus rebuilds every variant's store.
+    *
+    * Rebuild protocol is build-to-fresh-dir THEN swap THEN condemn: the
+    * superseded directory is retired only AFTER the replacement build
+    * succeeded, so a failed rebuild puts the old entry back with its
+    * directory intact. A build FAILURE deletes only the half-written fresh
+    * directory before rethrowing (a designed failure like non-convergence
+    * must not leak a temp dir per retry on a long-lived gateway). The
+    * build runs outside the table's lock ([[buildOnce]]); same-key callers
+    * wait for it rather than racing duplicate Spark jobs. */
   private[graft] def contentKeyedTempParquet(
-      cache: java.util.concurrent.ConcurrentHashMap[String, (String, String)],
       s: SparkSession, path: String, prefix: String, variant: String = "")
       (build: => DataFrame): DataFrame =
-    contentKeyedTempParquetKeyed(cache, s, path, prefix, variant)(_ => build)._2
+    contentKeyedTempParquetKeyed(s, path, prefix, variant)(_ => build)._2
 
-  /** [[contentKeyedTempParquet]] that also passes the build its cache
+  /** [[contentKeyedTempParquet]] that also passes the build its content
     * token and returns the SERVED entry's token. For builders with a
     * driver-side half (BPE/WordPiece merge lists, unigram EM state) that
     * must stay in lockstep with the parquet half: keying the driver half
-    * on a token recomputed OUTSIDE the cache races an in-place corpus
+    * on a token recomputed OUTSIDE the table races an in-place corpus
     * regen — the store lands under the fresh token while the driver half
     * holds the stale one (or vice versa), and the pair never re-syncs
     * because later calls serve the warm store without rebuilding (ADVICE
-    * r12). Keying both halves on THIS token — written inside the same
-    * bin-locked compute — makes desync impossible by construction. */
+    * r12). Keying both halves on THIS token — the one the served entry
+    * was built from — keeps them together. */
   private[graft] def contentKeyedTempParquetKeyed(
-      cache: java.util.concurrent.ConcurrentHashMap[String, (String, String)],
       s: SparkSession, path: String, prefix: String, variant: String = "")
       (build: String => DataFrame): (String, DataFrame) = {
     val token = contentToken(path)
-    val key = path + variant
-    val (servedToken, dir) = cache.compute(key, (_, old) => {
-      if (old != null && old._1 == token) old
-      else {
-        val out = newStoreDir(prefix)
-        try build(token).write.mode("overwrite").parquet(out)
-        catch {
-          case e: Throwable =>
-            deleteStoreFiles(out)
-            throw e
-        }
-        if (old != null) {
-          // Same serve→execute hazard as LRU eviction: a reader served the
-          // superseded dir may not have executed yet — condemn, don't cut.
-          condemnStoreDir(old._2)
-          deregisterStoreDir(old._2)
-        }
-        tempBuilds.incrementAndGet()
-        // Registering inside the bin lock is safe (the registry takes no
-        // cache locks) and makes entry + registry row atomic to evictors.
-        storeRegistry.put(out, StoreEntry(cache, key, token, prefix, out,
-          dirBytes(out),
-          new java.util.concurrent.atomic.AtomicLong(storeSeq.incrementAndGet())))
-        (token, out)
+    val key = (prefix, path + variant)
+    val e = buildOnce(stores, key)(_.token == token) { prev =>
+      val out = newStoreDir(prefix)
+      try build(token).write.mode("overwrite").parquet(out)
+      catch {
+        case t: Throwable =>
+          deleteStoreFiles(out)
+          throw t
       }
-    })
-    Option(storeRegistry.get(dir))
-      .foreach(_.lastAccess.set(storeSeq.incrementAndGet()))
-    enforceStoreBudget(dir)
-    (servedToken, s.read.parquet(dir))
+      // Same serve→execute hazard as LRU eviction: a reader served the
+      // superseded dir may not have executed yet — condemn, don't cut.
+      prev.foreach(p => condemnStoreDir(p.dir))
+      tempBuilds.incrementAndGet()
+      StoreEntry(prefix, key._2, token, out, dirBytes(out),
+        new AtomicLong(storeSeq.incrementAndGet()))
+    }
+    e.lastAccess.set(storeSeq.incrementAndGet())
+    enforceStoreBudget(key)
+    (e.token, s.read.parquet(e.dir))
   }
 
   /** Once-per-token in-memory build — the driver-memory sibling of
     * [[contentKeyedTempParquet]], for caches of plain values (centroid
-    * arrays, corpus row counts) whose builders run Spark jobs.
-    *
-    * A bare `TrieMap.getOrElseUpdate` is NOT atomic for an expensive
-    * builder: two concurrent callers for one token can both run the build
-    * (racing duplicate Spark jobs), and eviction side effects inside the
-    * builder mutate the map mid-computation. Here exactly one caller wins
-    * `computeIfAbsent` (which only installs an empty future — no work under
-    * the bin lock), runs the build outside any map lock, then completes the
-    * future; everyone else awaits it. On failure the mapping is removed
-    * (later callers retry) and waiters see the exception.
+    * arrays, corpus row counts) whose builders run Spark jobs. One build
+    * per token through [[buildOnce]] (a bare `TrieMap.getOrElseUpdate`
+    * would let two concurrent callers both run it); the hit path is one
+    * map lookup.
     *
     * `evict` names the stale keys to drop after a successful build (e.g.
     * superseded content tokens for the same corpus path — use
@@ -401,40 +416,21 @@ object Tables {
     * rebuild on refetch, not staleness — entries are content-keyed). */
   private[graft] val KEYED_ONCE_CAP = 64
   private[graft] def keyedOnce[T](
-      cache: java.util.concurrent.ConcurrentHashMap[
-        String, java.util.concurrent.CompletableFuture[T]],
-      token: String)(evict: String => Boolean)(build: => T): T = {
-    var mine = false
-    val f = cache.computeIfAbsent(token, _ => {
-      mine = true; new java.util.concurrent.CompletableFuture[T]()
-    })
-    if (mine) {
-      try {
-        val v = build
-        cache.entrySet().forEach(e =>
-          if (e.getKey != token && e.getValue.isDone && evict(e.getKey))
-            cache.remove(e.getKey, e.getValue))
-        if (cache.size > KEYED_ONCE_CAP) {
-          val it = cache.entrySet().iterator()
-          while (cache.size > KEYED_ONCE_CAP && it.hasNext) {
-            val e = it.next()
-            if ((e.getValue ne f) && e.getValue.isDone) it.remove()
-          }
+      cache: ConcurrentHashMap[String, CompletableFuture[T]],
+      token: String)(evict: String => Boolean)(build: => T): T =
+    buildOnce(cache, token)(_ => true) { _ =>
+      val v = build
+      cache.entrySet().forEach(e =>
+        if (e.getKey != token && e.getValue.isDone && evict(e.getKey))
+          cache.remove(e.getKey, e.getValue))
+      if (cache.size > KEYED_ONCE_CAP) {
+        val it = cache.entrySet().iterator()
+        while (cache.size > KEYED_ONCE_CAP && it.hasNext) {
+          if (it.next().getValue.isDone) it.remove()
         }
-        f.complete(v)
-      } catch {
-        case e: Throwable =>
-          cache.remove(token, f)
-          f.completeExceptionally(e)
-          throw e
       }
+      v
     }
-    try f.join()
-    catch {
-      case e: java.util.concurrent.CompletionException =>
-        throw Option(e.getCause).getOrElse(e)
-    }
-  }
 
   /** The safe eviction predicate for [[keyedOnce]] caches keyed on
     * [[contentToken]]-prefixed tokens: true when `other` names the same
@@ -467,48 +463,66 @@ object Tables {
     }
   }
 
-  /** Leak bound for the bucketed CATALOG store caches (the incremental
-    * fingerprint and ANN band stores — `saveAsTable` under a shared temp
-    * root, keyed by corpus path): same growth shape as the temp-parquet
-    * family but the entry is a catalog table, so eviction needs the
-    * session. Arbitrary-order cap like [[KEYED_ONCE_CAP]] (these caches
-    * carry no access sequence): a dropped store costs one rebuild on the
-    * next batch against that corpus, never staleness. `keep` is the key
-    * just served. */
+  /** One bucketed catalog store: its table and the table's files. */
+  private[graft] final case class CatalogStore(token: String, table: String,
+      dir: String)
+
+  /** The bucketed CATALOG stores (incremental dedup's fingerprint store,
+    * incremental ANN's band store), keyed by (store family, input path):
+    * the catalog-table sibling of the store table, under [[buildOnce]]. */
+  private val catalogStores =
+    new ConcurrentHashMap[(String, String), CompletableFuture[CatalogStore]]()
+
+  /** Leak bound per catalog store family: the entry is a catalog table, so
+    * eviction needs the session, and the family carries no access
+    * sequence — an arbitrary-order cap like [[KEYED_ONCE_CAP]]. A dropped
+    * store costs one rebuild on the next batch against that corpus, never
+    * staleness. */
   private[graft] val CATALOG_STORE_CAP = 8
-  private[graft] def capCatalogStores(
-      cache: java.util.concurrent.ConcurrentHashMap[String, (String, String)],
-      s: SparkSession, root: String, keep: String): Unit = {
-    if (cache.size() <= CATALOG_STORE_CAP) return
-    val it = cache.entrySet().iterator()
-    while (cache.size() > CATALOG_STORE_CAP && it.hasNext) {
-      val e = it.next()
-      if (e.getKey != keep) {
-        // Exact-value remove (ADVICE r13): a concurrent compute may have
-        // just REFRESHED this key (new token, new table). A blind
-        // it.remove() would drop the fresh mapping while only the captured
-        // stale table got dropped — leaking the fresh table's files AND
-        // its catalog entry. remove(key, capturedValue) only wins when the
-        // entry is still the one this iteration observed; a refreshed
-        // entry survives and its stale predecessor was already dropped by
-        // the refresh itself.
-        val captured = e.getValue
-        if (cache.remove(e.getKey, captured)) {
-          val table = captured._2
-          s.sql(s"DROP TABLE IF EXISTS $table")
-          deleteStoreFiles(s"$root/$table")
-        }
+  private val CATALOG_STORE_BUCKETS = 16
+
+  /** `rows` as a `bucketCol`-BUCKETED (+ sorted) external catalog table,
+    * one per (store family, input path) per JVM, so a probe joins it
+    * exchange-free on the store side: only the (small) new batch shuffles,
+    * the (huge) store is read in place bucket-by-bucket. Built once per
+    * `token` with no map lock held while `saveAsTable` runs, and rebuilt in
+    * place when the token changes or the session lost the table. The
+    * family keeps at most [[CATALOG_STORE_CAP]] tables; the path just
+    * served is never dropped. */
+  private[graft] def bucketedCatalogStore(s: SparkSession, store: String,
+      path: String, token: String, bucketCol: String)
+      (rows: => DataFrame): DataFrame = {
+    val table = s"${store}_" + java.security.MessageDigest.getInstance("MD5")
+      .digest(path.getBytes("UTF-8")).map("%02x".format(_)).mkString.take(12)
+    buildOnce(catalogStores, (store, path))(c =>
+        c.token == token && s.catalog.tableExists(c.table)) { prev =>
+      val dir = prev.fold(newStoreDir(store))(_.dir)
+      rows.repartition(CATALOG_STORE_BUCKETS, col(bucketCol))
+        .write.mode("overwrite")
+        .bucketBy(CATALOG_STORE_BUCKETS, bucketCol).sortBy(bucketCol)
+        .option("path", dir)
+        .saveAsTable(table)
+      CatalogStore(token, table, dir)
+    }
+    val family = completed(catalogStores).filter(_._1._1 == store)
+    var n = family.size
+    family.foreach { case (k, f, c) =>
+      // Exact-slot remove (ADVICE r13): a concurrent rebuild of this key
+      // keeps its fresh entry; only the slot observed here is dropped.
+      if (n > CATALOG_STORE_CAP && k._2 != path && catalogStores.remove(k, f)) {
+        n -= 1
+        s.sql(s"DROP TABLE IF EXISTS ${c.table}")
+        deleteStoreFiles(c.dir)
       }
     }
+    s.table(table)
   }
 
-  /** Register the shutdown reclamation for a [[contentKeyedTempParquet]]
-    * cache (call once per cache at object init). */
-  private[graft] def registerTempCacheCleanup(
-      cache: java.util.concurrent.ConcurrentHashMap[String, (String, String)]): Unit = {
-    sys.addShutdownHook {
-      cache.values.forEach { case (_, dir) => deleteStoreFiles(dir) }
-    }
-    ()
+  // The one shutdown reclamation for store files: live stores, live
+  // catalog stores, and every condemned dir regardless of its deadline.
+  sys.addShutdownHook {
+    storeEntries.foreach(e => deleteStoreFiles(e.dir))
+    completed(catalogStores).foreach(c => deleteStoreFiles(c._3.dir))
+    sweepCondemnedStores(force = true)
   }
 }

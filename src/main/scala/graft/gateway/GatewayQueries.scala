@@ -126,11 +126,11 @@ object GatewayQueries {
     Some("""SELECT 'minhash' AS site, 'linear' AS regime, TRUE AS no_escape"""))
 
   /** The `store_occupancy` observability view (refresh-on-scan over
-    * [[graft.Tables.storeRegistry]]): warm one store family (the
+    * the [[graft.Tables]] store table): warm one store family (the
     * near-dup pair store and its shingle index, via
     * [[graft.pipeline.Dedup.materializedPairs]]), then observe the view.
     * Deterministic by the budget invariant: the LRU enforcer keeps the
-    * registry at or under both caps after every store access, and the
+    * store table at or under both caps after every store access, and the
     * warmed stores are non-empty, so the aggregate observation is the
     * fixed relation (present, within count cap, within bytes cap) —
     * regardless of which other stores happen to be warm in this JVM.
@@ -145,7 +145,7 @@ object GatewayQueries {
       val rt = new JobRuntime(s)
       try {
         rt.registerStoreOccupancyView()
-        // coalesce(…, FALSE): with an EMPTY registry (warm store evicted
+        // coalesce(…, FALSE): with an EMPTY store table (warm store evicted
         // between the warm-up above and this scan) sum/any_value are NULL.
         // FALSE keeps the columns non-null and makes that edge fail loudly
         // AT THE GATE (a red store_present row) instead.

@@ -671,7 +671,7 @@ final class JobRuntime(
     * less often than queries run. */
   def registerGridDecisionsView(): Unit = registerView("grid_decisions")
 
-  /** One row per live persisted store ([[graft.Tables.storeRegistry]]) with
+  /** One row per live persisted store ([[graft.Tables.storeEntries]]) with
     * its on-disk bytes and LRU access sequence, plus the caps and the
     * eviction counter as constant columns (a grand-total footer that keeps
     * the view one relation). */
@@ -683,8 +683,8 @@ final class JobRuntime(
     }
   }
 
-  /** Register `store_occupancy` — the content-keyed temp-store registry
-    * as a refresh-on-scan SQL view, so a long-lived gateway's operator
+  /** Register `store_occupancy` — the content-keyed store table as a
+    * refresh-on-scan SQL view, so a long-lived gateway's operator
     * polls `SELECT store, count(*), sum(bytes) FROM store_occupancy GROUP
     * BY 1` and watches the LRU budget ([[graft.Tables.storeCountCap]] /
     * [[graft.Tables.storeBytesCap]]) hold as corpora come and go. */

@@ -222,42 +222,17 @@ object Curation {
     * (+ sorted) external table — so the incremental anti/outer join is
     * exchange-free on the store side: only the (small) new batch shuffles,
     * the (huge) historical store is read in place bucket-by-bucket. Keyed
-    * on the corpus content token and rebuilt when the corpus changes; the
-    * table files live under a shutdown-cleaned temp root (the
-    * shingle-index policy). Same store shape as the streaming ingest's
-    * ([[graft.streaming.EventStream]]). */
-  private val FP_STORE_BUCKETS = 16
-  private val fpStoreCache =
-    new java.util.concurrent.ConcurrentHashMap[String, (String, String)]()
-  private lazy val fpStoreRoot: String = {
-    // Honors spark.graft.store.root (shared FS on a multi-host cluster);
-    // local JVM temp otherwise. Hadoop-FS reclamation either way.
-    val dir = Tables.newStoreDir("graft-fp-store")
-    sys.addShutdownHook { Tables.deleteStoreFiles(dir) }
-    dir
-  }
-
+    * on the corpus content token and rebuilt when the corpus changes
+    * ([[Tables.bucketedCatalogStore]]). Same store shape as the streaming
+    * ingest's ([[graft.streaming.EventStream]]). */
   private def bucketedFpStore(s: SparkSession, d: String,
       fp: DataFrame): DataFrame = {
     val path = s"$d/documents.parquet"
-    val token = Tables.contentToken(path)
-    val table = "graft_fp_store_" + java.security.MessageDigest.getInstance("MD5")
-      .digest(path.getBytes("UTF-8")).map("%02x".format(_)).mkString.take(12)
-    fpStoreCache.compute(path, (_, old) => {
-      if (old != null && old._1 == token && s.catalog.tableExists(old._2)) old
-      else {
-        fp.filter(col("doc_id") % 2 === 0).select(col("fp")).distinct()
-          .withColumnRenamed("fp", "store_fp")
-          .repartition(FP_STORE_BUCKETS, col("store_fp"))
-          .write.mode("overwrite")
-          .bucketBy(FP_STORE_BUCKETS, "store_fp").sortBy("store_fp")
-          .option("path", s"$fpStoreRoot/$table")
-          .saveAsTable(table)
-        (token, table)
-      }
-    })
-    Tables.capCatalogStores(fpStoreCache, s, fpStoreRoot, path)
-    s.table(table)
+    Tables.bucketedCatalogStore(s, "graft_fp_store", path,
+      Tables.contentToken(path), "store_fp") {
+      fp.filter(col("doc_id") % 2 === 0).select(col("fp")).distinct()
+        .withColumnRenamed("fp", "store_fp")
+    }
   }
 
   /** Incremental dedup against a persisted fingerprint store: the batch
@@ -643,15 +618,11 @@ object Curation {
     * family now READS it as a second parquet input: two releases, two
     * scans, the IO shape a release-over-release gate has in production,
     * where snapshot B is last month's crawl sitting in its own
-    * directory. Materialized once per corpus per JVM
-    * ([[Tables.contentKeyedTempParquet]] discipline, like the shingle
-    * index); a testdata regen rebuilds it via the content token. */
-  private val snapshotBCache =
-    new java.util.concurrent.ConcurrentHashMap[String, (String, String)]()
-  Tables.registerTempCacheCleanup(snapshotBCache)
-
+    * directory. Materialized once per corpus per JVM as an entry of the
+    * [[Tables]] store table, like the shingle index; a testdata regen
+    * rebuilds it via the content token. */
   private def snapshotB(s: SparkSession, d: String): DataFrame =
-    Tables.contentKeyedTempParquet(snapshotBCache, s,
+    Tables.contentKeyedTempParquet(s,
       s"$d/documents.parquet", "graft-snapshot-b") {
       val base = docs(s, d)
       base.filter(col("doc_id") % 11 =!= 3)

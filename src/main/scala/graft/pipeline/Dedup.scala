@@ -65,21 +65,14 @@ object Dedup {
     * simhash 5.6 -> 3.6 s once the one blocking write is amortized across
     * the family (a cold standalone run pays the write once, still cheaper
     * than re-evaluating the HOF build per plan subtree). */
-  /** One index per (corpus dir) per JVM: the content is a pure function of
-    * the input parquet, so concurrent queries and repeated runs share a
-    * single copy instead of leaking a fresh temp directory per invocation
-    * (a long-lived gateway would otherwise grow /tmp without bound). The
-    * shutdown hook reclaims the copies. */
-  // path -> (content token, materialized dir). One entry per corpus path:
-  // a changed token evicts (and deletes) the superseded copy, so a
-  // long-lived gateway JVM holds at most one index per corpus.
-  private val shingleIndexCache =
-    new java.util.concurrent.ConcurrentHashMap[String, (String, String)]()
-  Tables.registerTempCacheCleanup(shingleIndexCache)
-
+  /** One index per corpus per JVM, in the [[graft.Tables]] store table:
+    * the content is a pure function of the input parquet, so concurrent
+    * queries and repeated runs share a single copy instead of leaking a
+    * fresh temp directory per invocation, and a changed content token
+    * rebuilds it (the superseded copy is condemned). */
   private def materializedShingles(s: SparkSession, d: String): DataFrame =
-    Tables.contentKeyedTempParquet(shingleIndexCache, s,
-      s"$d/documents.parquet", "graft-shingle-idx")(hashedShingles(docs(s, d)))
+    Tables.contentKeyedTempParquet(s,
+      s"$d/documents.parquet", SHINGLE_STORE)(hashedShingles(docs(s, d)))
 
   /** The verified near-dup pair relation as a content-keyed persisted
     * store — the shingle-index discipline one derivation deeper. Seven
@@ -92,43 +85,33 @@ object Dedup {
     * pass reads the stored edges. Freshness rides [[Tables.contentToken]]
     * of the input parquet (the `variant` suffix keys the threshold), so an
     * in-place corpus regen rebuilds instead of serving stale edges. */
-  private val pairsStoreCache =
-    new java.util.concurrent.ConcurrentHashMap[String, (String, String)]()
-  Tables.registerTempCacheCleanup(pairsStoreCache)
-
   private[graft] def materializedPairs(
       s: SparkSession, d: String, t: Double): DataFrame =
-    Tables.contentKeyedTempParquet(pairsStoreCache, s,
-      s"$d/documents.parquet", "graft-pairs-idx", s"#t=$t")(
+    Tables.contentKeyedTempParquet(s,
+      s"$d/documents.parquet", PAIRS_STORE, s"#t=$t")(
       verifiedPairs(s, d, t))
 
-  /** Test hook: drop every shared store (files AND cache entries) so the
-    * next consumer rebuilds from scratch — the cluster lane uses it to
-    * force the DISCOVERY shuffles (not just the graph rounds) across real
-    * executor-JVM boundaries at sf0.1. */
-  private[graft] def evictSharedStores(): Unit =
-    Seq(shingleIndexCache, pairsStoreCache, clusterLabelsCache,
-      strategyPairsCache, ccStarsCache).foreach(evictCache)
+  /** The store-table families this module owns. */
+  private final val SHINGLE_STORE = "graft-shingle-idx"
+  private final val PAIRS_STORE = "graft-pairs-idx"
+  private final val STRATEGY_STORE = "graft-strat-pairs"
+  private final val LABELS_STORE = "graft-cluster-labels"
+  private final val CCSTARS_STORE = "graft-ccstars-idx"
 
-  /** Drop only the per-strategy pair stores — the routing/telemetry specs
+  /** Test hook: evict every shared store (table entries now, files after
+    * the grace window) so the next consumer rebuilds from scratch — the
+    * cluster lane uses it to force the DISCOVERY shuffles (not just the
+    * graph rounds) across real executor-JVM boundaries at sf0.1. */
+  private[graft] def evictSharedStores(): Unit =
+    Tables.evictStores(Set(SHINGLE_STORE, PAIRS_STORE, STRATEGY_STORE,
+      LABELS_STORE, CCSTARS_STORE))
+
+  /** Evict only the per-strategy pair stores — the routing/telemetry specs
     * use this to force a strategy's banding to re-run (and its grid
     * decision to re-fire) without also rebuilding the shingle index the
     * banding reads. */
   private[graft] def evictStrategyStores(): Unit =
-    evictCache(strategyPairsCache)
-
-  private def evictCache(
-      c: java.util.concurrent.ConcurrentHashMap[String, (String, String)]): Unit = {
-    c.values.forEach { case (_, dir) =>
-      // Grace-windowed, same as LRU eviction/supersede (ADVICE r14): a
-      // lazy plan served from this dir before the evict may not have
-      // executed yet. Specs that need observable immediate deletion set
-      // storeEvictionGraceMs = 0 or force-sweep.
-      Tables.condemnStoreDir(dir)
-      Tables.deregisterStoreDir(dir)
-    }
-    c.clear()
-  }
+    Tables.evictStores(_ == STRATEGY_STORE)
 
   /** Exact dedup: sha256 over normalized text; keep the smallest doc_id per
     * digest. One shuffle keyed by digest — uniform by construction, so no
@@ -810,14 +793,10 @@ object Dedup {
     * Production shape at 100 TB: a dedup strategy's verified pair set IS
     * the deliverable relation — it is discovered once and read by every
     * consumer, not re-banded per downstream query. */
-  private val strategyPairsCache =
-    new java.util.concurrent.ConcurrentHashMap[String, (String, String)]()
-  Tables.registerTempCacheCleanup(strategyPairsCache)
-
   private[graft] def materializedStrategyPairs(
       s: SparkSession, d: String, strat: String): DataFrame =
-    Tables.contentKeyedTempParquet(strategyPairsCache, s,
-      s"$d/documents.parquet", "graft-strat-pairs", s"#strat=$strat")(
+    Tables.contentKeyedTempParquet(s,
+      s"$d/documents.parquet", STRATEGY_STORE, s"#strat=$strat")(
       strat match {
         case "simhash" => simhashPairs(s, d)
         case "minhash" => minhashPairs(s, d)
@@ -830,11 +809,10 @@ object Dedup {
     * plan is a store scan on every route once the store exists). */
   private[graft] def storedStrategies(d: String): Set[String] = {
     val prefix = s"$d/documents.parquet#strat="
-    val out = scala.collection.mutable.Set[String]()
-    strategyPairsCache.keySet.forEach { k =>
-      if (k.startsWith(prefix)) out += k.stripPrefix(prefix)
-    }
-    out.toSet
+    Tables.storeEntries.collect {
+      case e if e.store == STRATEGY_STORE && e.key.startsWith(prefix) =>
+        e.key.stripPrefix(prefix)
+    }.toSet
   }
 
   private val dedupSimhash = QueryDef(
@@ -909,13 +887,9 @@ object Dedup {
     * (session-free files — a cached DataFrame would hold dead-session
     * checkpoint blocks after a gateway restart-in-place), keyed on the
     * corpus content token, stale entries deleted in place. */
-  private val clusterLabelsCache =
-    new java.util.concurrent.ConcurrentHashMap[String, (String, String)]()
-  Tables.registerTempCacheCleanup(clusterLabelsCache)
-
-  private[pipeline] def clusterLabelsCached(s: SparkSession, d: String): DataFrame =
-    Tables.contentKeyedTempParquet(clusterLabelsCache, s,
-      s"$d/documents.parquet", "graft-cluster-labels")(clusterLabels(s, d))
+  private[graft] def clusterLabelsCached(s: SparkSession, d: String): DataFrame =
+    Tables.contentKeyedTempParquet(s,
+      s"$d/documents.parquet", LABELS_STORE)(clusterLabels(s, d))
 
   /** Connected-component labels over the verified near-dup pairs —
     * [[dedupClusters]]'s body, shared with [[dedupKeepBest]] (which picks
@@ -1874,13 +1848,9 @@ object Dedup {
     * so a regen rebuilds; at 100 TB this is the production shape — the
     * dup graph's converged stars are derived once and every consumer
     * (cluster report, A/B certification, keep-best) reads the relation. */
-  private val ccStarsCache =
-    new java.util.concurrent.ConcurrentHashMap[String, (String, String)]()
-  Tables.registerTempCacheCleanup(ccStarsCache)
-
   private[graft] def ccStarsEdgesCached(s: SparkSession, d: String): DataFrame =
-    Tables.contentKeyedTempParquet(ccStarsCache, s,
-      s"$d/documents.parquet", "graft-ccstars-idx", "#t=0.5")(
+    Tables.contentKeyedTempParquet(s,
+      s"$d/documents.parquet", CCSTARS_STORE, "#t=0.5")(
       ccStarsEdges(s, d))
   private val ccStars = QueryDef(
     "q_cc_stars",

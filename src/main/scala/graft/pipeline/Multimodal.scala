@@ -55,21 +55,14 @@ final case class ImagePHash(
   */
 object Multimodal {
 
-  /** Synthetic media payloads persist once per corpus (content-keyed temp
-    * parquet, the [[graft.Tables.contentKeyedTempParquet]] discipline):
-    * payload GENERATION is fixture synthesis, not the operator under test
-    * — a real corpus reads stored bytes and the operator DECODES them, so
-    * serving the payload table from parquet is exactly the production
-    * shape, and repeated invocations (bench warm+timed passes; features +
-    * phash both reading images) stop paying the JDK encoders per run. */
-  private val imagePayloadCache =
-    new java.util.concurrent.ConcurrentHashMap[String, (String, String)]()
-  private val audioPayloadCache =
-    new java.util.concurrent.ConcurrentHashMap[String, (String, String)]()
-  private val videoPayloadCache =
-    new java.util.concurrent.ConcurrentHashMap[String, (String, String)]()
-  Seq(imagePayloadCache, audioPayloadCache, videoPayloadCache)
-    .foreach(Tables.registerTempCacheCleanup)
+  /** Synthetic media payloads persist once per corpus in the
+    * [[graft.Tables]] store table (content-keyed temp parquet, one entry
+    * per media kind): payload GENERATION is fixture synthesis, not the
+    * operator under test — a real corpus reads stored bytes and the
+    * operator DECODES them, so serving the payload table from parquet is
+    * exactly the production shape, and repeated invocations (bench
+    * warm+timed passes; features + phash both reading images) stop paying
+    * the JDK encoders per run. */
 
   /** Build the byte-payload media table from `documents`: payload = UTF-8
     * bytes of the text — the deterministic stand-in feeding the
@@ -90,7 +83,7 @@ object Multimodal {
     * that an oracle can recompute. Payload stays an opaque `binary` column
     * with typed metadata — the 100 TB schema shape. */
   def imageTable(s: SparkSession, d: String): DataFrame =
-    Tables.contentKeyedTempParquet(imagePayloadCache, s,
+    Tables.contentKeyedTempParquet(s,
       s"$d/documents.parquet", "graft-media-img")(imageTableBuild(s, d))
 
   /** Media-store partitioning: the downstream decode stages are CPU-bound
@@ -233,7 +226,7 @@ object Multimodal {
     * makes the decoded features a closed-form function of the id, like
     * the PNG path. Payload stays opaque `binary` + typed metadata. */
   def audioTable(s: SparkSession, d: String): DataFrame =
-    Tables.contentKeyedTempParquet(audioPayloadCache, s,
+    Tables.contentKeyedTempParquet(s,
       s"$d/documents.parquet", "graft-media-wav")(audioTableBuild(s, d))
 
   private def audioTableBuild(s: SparkSession, d: String): DataFrame = {
@@ -281,7 +274,7 @@ object Multimodal {
     * from `doc_id` alone. Payload stays opaque `binary` + typed
     * metadata, like images and audio. */
   def videoTable(s: SparkSession, d: String): DataFrame =
-    Tables.contentKeyedTempParquet(videoPayloadCache, s,
+    Tables.contentKeyedTempParquet(s,
       s"$d/documents.parquet", "graft-media-gif")(videoTableBuild(s, d))
 
   private def videoTableBuild(s: SparkSession, d: String): DataFrame = {

@@ -307,13 +307,10 @@ object Profiling {
     * decade law) plus the cheap classifier per query. One build per corpus
     * per JVM; both builders come from the REGISTERED QueryDefs, so the
     * store can never drift from the gated definitions of its inputs. */
-  private val scoreLabelCache =
-    new java.util.concurrent.ConcurrentHashMap[String, (String, String)]()
-  Tables.registerTempCacheCleanup(scoreLabelCache)
 
   private def scoreLabelStore(
       s: org.apache.spark.sql.SparkSession, d: String): DataFrame =
-    Tables.contentKeyedTempParquet(scoreLabelCache, s,
+    Tables.contentKeyedTempParquet(s,
       s"$d/documents.parquet", "graft-scorelab-store") {
       def defOf(mod: Seq[QueryDef], n: String) = mod.find(_.name == n).get
       defOf(Curation.all, "q_quality_classifier").build(s, d)

@@ -362,38 +362,13 @@ object Similarity {
     * side: only the new batch's band rows shuffle, the historical corpus
     * is read in place bucket-by-bucket, so per-batch cost is independent
     * of store size. Keyed on the corpus content token (+ geometry) and
-    * rebuilt when either changes; files live under a shutdown-cleaned
-    * temp root. */
-  private val ANN_STORE_BUCKETS = 16
-  private val annStoreCache =
-    new java.util.concurrent.ConcurrentHashMap[String, (String, String)]()
-  private lazy val annStoreRoot: String = {
-    // Honors spark.graft.store.root — see Curation.fpStoreRoot.
-    val dir = Tables.newStoreDir("graft-ann-store")
-    sys.addShutdownHook { Tables.deleteStoreFiles(dir) }
-    dir
-  }
-
+    * rebuilt when either changes ([[Tables.bucketedCatalogStore]]). */
   private def bucketedBandStore(s: SparkSession, d: String, even: DataFrame,
       nTables: Int, nBits: Int): DataFrame = {
     val path = s"$d/embeddings.parquet"
-    val token = Tables.contentToken(path) + s"#$nTables#$nBits"
-    val table = "graft_ann_store_" + java.security.MessageDigest.getInstance("MD5")
-      .digest(path.getBytes("UTF-8")).map("%02x".format(_)).mkString.take(12)
-    annStoreCache.compute(path, (_, old) => {
-      if (old != null && old._1 == token && s.catalog.tableExists(old._2)) old
-      else {
-        bandRows(even, nTables, nBits, "store_vec_id", "store_v")
-          .repartition(ANN_STORE_BUCKETS, col("bsig"))
-          .write.mode("overwrite")
-          .bucketBy(ANN_STORE_BUCKETS, "bsig").sortBy("bsig")
-          .option("path", s"$annStoreRoot/$table")
-          .saveAsTable(table)
-        (token, table)
-      }
-    })
-    Tables.capCatalogStores(annStoreCache, s, annStoreRoot, path)
-    s.table(table)
+    Tables.bucketedCatalogStore(s, "graft_ann_store", path,
+      Tables.contentToken(path) + s"#$nTables#$nBits", "bsig")(
+      bandRows(even, nTables, nBits, "store_vec_id", "store_v"))
   }
 
   /** Incremental ANN ingest: a batch of new vectors (odd vec_ids,
@@ -1153,12 +1128,9 @@ object Similarity {
     * (qid, nid, s, rn) relation so q_ann_brute serves its gated columns
     * from the same copy the eval judges against — they can never drift.
     */
-  private val bruteCache =
-    new java.util.concurrent.ConcurrentHashMap[String, (String, String)]()
-  Tables.registerTempCacheCleanup(bruteCache)
 
   private def bruteTopKStore(s: SparkSession, d: String, minNid: Int): DataFrame =
-    Tables.contentKeyedTempParquet(bruteCache, s, s"$d/embeddings.parquet",
+    Tables.contentKeyedTempParquet(s, s"$d/embeddings.parquet",
       "graft-brute-store", s"#min=$minNid") {
       val e = emb(s, d)
       val q = broadcast(e.filter(col("vec_id") < NQ)

@@ -507,13 +507,10 @@ object TextAnalysis {
     * full bigram-model build per query. Production persists the score
     * table once per corpus snapshot (CCNet's own pipeline shape) and
     * every gate reads it; freshness rides the corpus content token. */
-  private val nllStoreCache =
-    new java.util.concurrent.ConcurrentHashMap[String, (String, String)]()
-  Tables.registerTempCacheCleanup(nllStoreCache)
 
   private[pipeline] def nllStore(
       s: org.apache.spark.sql.SparkSession, d: String): DataFrame =
-    Tables.contentKeyedTempParquet(nllStoreCache, s,
+    Tables.contentKeyedTempParquet(s,
       s"$d/documents.parquet", "graft-nll-store")(perplexityNllBuild(s, d))
 
   private def perplexityNllBuild(
@@ -1077,12 +1074,9 @@ object TextAnalysis {
     * were normalized to it (identical on any single-spaced corpus — the
     * gate corpus by construction).
     */
-  private val bigramCache =
-    new java.util.concurrent.ConcurrentHashMap[String, (String, String)]()
-  Tables.registerTempCacheCleanup(bigramCache)
 
   private[graft] def bigramStore(s: SparkSession, d: String): DataFrame =
-    Tables.contentKeyedTempParquet(bigramCache, s,
+    Tables.contentKeyedTempParquet(s,
       s"$d/documents.parquet", "graft-bigram-store") {
       Tables.spreadForRowCpu(docs(s, d))
         .select(col("source"),
@@ -1136,23 +1130,22 @@ object TextAnalysis {
     * (w, cnt, syms) word table (temp parquet). Freshness rides
     * [[Tables.contentToken]]: an in-place corpus regen rebuilds both.
     */
-  private val bpeWordCache =
-    new java.util.concurrent.ConcurrentHashMap[String, (String, String)]()
-  Tables.registerTempCacheCleanup(bpeWordCache)
   private val bpeMergesByPath = new java.util.concurrent.ConcurrentHashMap[
     String, (String, Seq[(Long, String, String, Long)])]()
 
   private[graft] def bpeLearn(s: SparkSession, d: String)
       : (Seq[(Long, String, String, Long)], DataFrame) = {
     val path = s"$d/documents.parquet"
-    // Both halves key on the token the STORE CACHE computed (ADVICE r12):
+    // Both halves key on the token the STORE TABLE served (ADVICE r12):
     // an outer-scope token races an in-place corpus regen — the store
     // would land under the fresh token while the merge map held the
     // stale one, wedging every later call on the require below. The
-    // keyed variant writes both halves inside one bin-locked compute, so
-    // the invariant is structural and the require is a pure assertion.
+    // build writes the merge list before its store entry is published,
+    // and same-key callers wait for that build; only a regen rebuilt
+    // between this serve and the read below can trip the require, which
+    // then fails loudly instead of pairing mismatched halves.
     val (token, tbl) = Tables.contentKeyedTempParquetKeyed(
-      bpeWordCache, s, path, "graft-bpe-store") { tok =>
+      s, path, "graft-bpe-store") { tok =>
       var cur = wordTable(s, d)
       val merges = Seq.newBuilder[(Long, String, String, Long)]
       for (step <- 1 to BPE_MERGES) {
@@ -1307,9 +1300,6 @@ object TextAnalysis {
     * [[bpeLearn]] discipline, r12): q_wordpiece_train reads the merge
     * list, q_wordpiece_encode the final word table; one training run per
     * corpus content per JVM fills both halves on the same token. */
-  private val wpWordCache =
-    new java.util.concurrent.ConcurrentHashMap[String, (String, String)]()
-  Tables.registerTempCacheCleanup(wpWordCache)
   private val wpMergesByPath = new java.util.concurrent.ConcurrentHashMap[
     String, (String, Seq[(Long, String, String, Long, Long)])]()
 
@@ -1318,7 +1308,7 @@ object TextAnalysis {
     val path = s"$d/documents.parquet"
     // Keyed-token discipline — see [[bpeLearn]] (ADVICE r12).
     val (token, tbl) = Tables.contentKeyedTempParquetKeyed(
-      wpWordCache, s, path, "graft-wp-store") { tok =>
+      s, path, "graft-wp-store") { tok =>
       var cur = wordTable(s, d)
       val merges = Seq.newBuilder[(Long, String, String, Long, Long)]
       for (step <- 1 to WP_MERGES) {

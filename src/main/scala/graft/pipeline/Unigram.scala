@@ -148,12 +148,11 @@ object Unigram {
     * Cached once per corpus content per JVM (the bpeLearn store
     * discipline): BOTH gated consumers (q_unigram_train, q_unigram_encode)
     * replay the identical seed + EM recurrence, each paying the corpus
-    * scan plus [[EM_ROUNDS]] driver-pull rounds. The word table persists
-    * as temp parquet; the driver-side EM state pins via [[Tables.keyedOnce]]
-    * on the SAME content token, so the pair can never desynchronize. */
-  private val uniWordCache =
-    new java.util.concurrent.ConcurrentHashMap[String, (String, String)]()
-  Tables.registerTempCacheCleanup(uniWordCache)
+    * scan plus [[EM_ROUNDS]] driver-pull rounds. The word table is an
+    * entry of the [[Tables]] store table; the driver-side EM state pins
+    * via [[Tables.keyedOnce]] on the token that entry was served under and
+    * is derived from the served words, so the pair can never
+    * desynchronize. */
   private val uniStateCache = new java.util.concurrent.ConcurrentHashMap[
     String, java.util.concurrent.CompletableFuture[
       (Seq[(String, Seq[Long])], Seq[(String, Long)], Int)]]()
@@ -165,7 +164,7 @@ object Unigram {
     // the serve raced an in-place corpus regen: state derived from the
     // old words could pin under the new token and serve a mismatched
     // (words, state) pair until the NEXT regen.
-    val (token, served) = Tables.contentKeyedTempParquetKeyed(uniWordCache, s,
+    val (token, served) = Tables.contentKeyedTempParquetKeyed(s,
       s"$d/documents.parquet", "graft-uniword-store")(_ => wordTable(s, d))
     val words = served.localCheckpoint()
     val (hist, sc, v) =

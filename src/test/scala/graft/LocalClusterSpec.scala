@@ -99,19 +99,6 @@ class LocalClusterSpec extends AnyFunSuite with BeforeAndAfterAll {
   private def canon(df: DataFrame): Seq[String] =
     df.collect().map(_.toString).sorted.toSeq
 
-  // Executor JVMs are launched raw by the standalone Worker (no
-  // spark-submit), so they need the same JDK17 module opens the forked
-  // driver JVM gets from build.sbt.
-  private val addOpens = Seq(
-    "java.base/java.lang", "java.base/java.lang.invoke",
-    "java.base/java.lang.reflect", "java.base/java.io",
-    "java.base/java.net", "java.base/java.nio",
-    "java.base/java.util", "java.base/java.util.concurrent",
-    "java.base/java.util.concurrent.atomic",
-    "java.base/sun.nio.ch", "java.base/sun.nio.cs",
-    "java.base/sun.security.action", "java.base/sun.util.calendar",
-  ).map(p => s"--add-opens=$p=ALL-UNNAMED").mkString(" ")
-
   /** The sf0.1 heavy-family subset (VERDICT r11 missing #2): the sf0.001
     * slice proves multi-JVM SEMANTICS; this runs the dedup/graph family's
     * real sf0.1 shuffle volumes — prefix-join discovery, banding, Pregel
@@ -173,10 +160,10 @@ class LocalClusterSpec extends AnyFunSuite with BeforeAndAfterAll {
       // on the executor JVMs' classpath; the Spark distribution itself
       // comes from $SPARK_HOME/jars via the launcher.
       .config("spark.executor.extraClassPath", sys.props("java.class.path"))
-      .config("spark.executor.extraJavaOptions", addOpens)
-    cluster = Sessions.configure(b, "8").getOrCreate()
-    cluster.sparkContext.setLogLevel("WARN")
-    Sessions.registerGridWitness(cluster) // + graft_wmean registration
+      // Executor JVMs are launched raw by the standalone Worker (no
+      // spark-submit), so they need the JDK module opens.
+      .config("spark.executor.extraJavaOptions", Sessions.jdkOpens.mkString(" "))
+    cluster = Sessions.start(b, "8")
     gateway.Udfs.register(cluster)
     // Barrier until both executor JVMs have registered and run tasks (also
     // fails fast here, not in some mid-slice query, if launch is broken).
@@ -263,11 +250,7 @@ class LocalClusterSpec extends AnyFunSuite with BeforeAndAfterAll {
       val name = "q_dedup_minhash" // store-backed: shingle + strategy stores
       assert(canon(SparkEntry.queries(name)(cluster, sfDir)) == expected(name),
         "store-backed query diverged under a redirected store root")
-      val dirs = {
-        val b = scala.collection.mutable.ArrayBuffer.empty[String]
-        Tables.storeRegistry.forEach((d, _) => b += d)
-        b.toSeq
-      }
+      val dirs = Tables.storeEntries.map(_.dir)
       assert(dirs.nonEmpty && dirs.exists(_.startsWith(sharedRoot.toString)),
         s"no store landed under the configured root; registry: $dirs")
       // Re-serve: warm store, no rebuild — the cross-JVM scan reads the

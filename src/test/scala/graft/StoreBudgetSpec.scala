@@ -49,11 +49,9 @@ class StoreBudgetSpec extends SparkSpec {
         val hit = snap.filter(r => r._1 == "graft-pairs-idx" &&
           r._2.startsWith(dirs.head))
         assert(hit.size == 1, s"expected one pairs store for corpus0, got $snap")
-        // Registry keys are dirs; recover via the registry map itself.
-        var dir: String = null
-        Tables.storeRegistry.forEach((d, e) =>
-          if (e.store == "graft-pairs-idx" && e.key.startsWith(dirs.head)) dir = d)
-        dir
+        // Each store-table entry carries its dir.
+        Tables.storeEntries.find(e => e.store == "graft-pairs-idx" &&
+          e.key.startsWith(dirs.head)).map(_.dir).orNull
       }
       assert(firstDir != null && new java.io.File(firstDir).exists())
 
@@ -63,8 +61,8 @@ class StoreBudgetSpec extends SparkSpec {
       val evict0 = Tables.storeEvictions.get()
       dirs.tail.foreach(d =>
         pipeline.Dedup.materializedPairs(spark, d, 0.5).count())
-      assert(Tables.storeRegistry.size() <= 3,
-        s"registry ${Tables.storeRegistry.size()} exceeds cap 3")
+      assert(Tables.storeEntries.size <= 3,
+        s"store table ${Tables.storeEntries.size} exceeds cap 3")
       assert(Tables.storeEvictions.get() > evict0, "no eviction fired")
       // Force-drain the condemned queue first: an eviction that raced a
       // straggler thread from an earlier suite can condemn under the
@@ -77,8 +75,8 @@ class StoreBudgetSpec extends SparkSpec {
       assert(Tables.condemnedStores.isEmpty,
         "forced sweep must drain the condemned queue")
       // Every surviving registry row points at a live directory.
-      Tables.storeRegistry.forEach((d, _) =>
-        assert(new java.io.File(d).exists(), s"registry row $d has no files"))
+      Tables.storeEntries.foreach(e => assert(new java.io.File(e.dir).exists(),
+        s"table entry ${e.dir} has no files"))
       val bytes = Tables.storeOccupancySnapshot.map(_._3).sum
       assert(bytes <= Tables.storeBytesCap)
 
@@ -110,9 +108,8 @@ class StoreBudgetSpec extends SparkSpec {
       // Serve corpus 0 LAZILY — no action yet, exactly the race window.
       val lazily = pipeline.Dedup.materializedPairs(spark, dirs.head, 0.5)
         .orderBy("a_id", "b_id")
-      var dir0: String = null
-      Tables.storeRegistry.forEach((dd, e) =>
-        if (e.store == "graft-pairs-idx" && e.key.startsWith(dirs.head)) dir0 = dd)
+      val dir0 = Tables.storeEntries.find(e => e.store == "graft-pairs-idx" &&
+        e.key.startsWith(dirs.head)).map(_.dir).orNull
       assert(dir0 != null)
       // Cycle the other corpora: corpus 0's stores get EVICTED (registry
       // row + cache entry gone) under the low cap...
@@ -120,7 +117,7 @@ class StoreBudgetSpec extends SparkSpec {
       dirs.tail.foreach(d =>
         pipeline.Dedup.materializedPairs(spark, d, 0.5).count())
       assert(Tables.storeEvictions.get() > evict0, "no eviction fired")
-      assert(!Tables.storeRegistry.containsKey(dir0),
+      assert(!Tables.storeEntries.exists(_.dir == dir0),
         "victim must leave the registry immediately")
       // ...but its FILES survive (condemned, not deleted), so the lazy
       // plan served before the evictions still executes correctly.
@@ -142,6 +139,107 @@ class StoreBudgetSpec extends SparkSpec {
     }
   }
 
+  test("nested stores under a count cap of 1: cluster labels over pairs over " +
+      "shingles build, evicted dirs are gone, every entry's dir exists") {
+    // Each build serves the store it nests on (labels -> pairs -> shingles)
+    // and runs a budget pass of its own, so with a cap of 1 every inner
+    // store is evicted while an outer build is still in flight.
+    val root = java.nio.file.Files.createTempDirectory("graft-nested-spec")
+    val storeRoot = java.nio.file.Files.createTempDirectory("graft-nested-root")
+    val oldCap = Tables.storeCountCap
+    val oldGrace = Tables.storeEvictionGraceMs
+    try {
+      // A warm pair store of another corpus whose key shares d's hash bin
+      // in a 16-bin map: evicting it while d's pair build was in flight
+      // lost d's entry when every store family had its own map, and the
+      // later eviction of d's pair store then kept its files (the LRU
+      // flake of full runs, where earlier suites leave pair stores warm).
+      def bin(c: String) = {
+        val h = s"$c/documents.parquet#t=0.5".hashCode
+        (h ^ (h >>> 16)) & 0x7fffffff & 15
+      }
+      val other = writeCorpus(root, 0)
+      val d = writeCorpus(root, (1 to 500).find(j =>
+        bin(root.resolve(s"corpus$j").toString) == bin(other)).get)
+      spark.conf.set("spark.graft.store.root", storeRoot.toString)
+      pipeline.Dedup.materializedPairs(spark, other, 0.5).count()
+      Tables.storeCountCap = 1
+      Tables.storeEvictionGraceMs = 0L
+      val builds0 = Tables.tempBuildCount
+      val evict0 = Tables.storeEvictions.get()
+      val first = pipeline.Dedup.clusterLabelsCached(spark, d)
+        .orderBy("doc_id").collect().toSeq
+      assert(first.nonEmpty, "tiny corpus must yield a near-dup cluster")
+      assert(Tables.tempBuildCount - builds0 == 3,
+        "labels, pairs and shingles must each build once")
+      assert(Tables.storeEvictions.get() - evict0 >= 2,
+        "the cap must evict the shingle and pair stores")
+      assert(Tables.storeEntries.size <= 1)
+      Tables.sweepCondemnedStores(force = true)
+      // Every store dir this test made lives under the configured root:
+      // exactly the table's entries survive, each with its files.
+      val onDisk = java.nio.file.Files.list(storeRoot).iterator()
+      val left = scala.collection.mutable.Set[String]()
+      while (onDisk.hasNext) {
+        val it = java.nio.file.Files.list(onDisk.next()).iterator()
+        while (it.hasNext) left += it.next().toString
+      }
+      val live = Tables.storeEntries.map(_.dir).filter(_.startsWith(storeRoot.toString))
+      assert(left.toSet == live.toSet,
+        s"evicted store dirs survive the forced sweep: ${left.toSet -- live}")
+      Tables.storeEntries.foreach(e => assert(new java.io.File(e.dir).exists(),
+        s"table entry ${e.dir} has no files"))
+      // A second call serves the surviving labels store: same rows, no build.
+      val builds1 = Tables.tempBuildCount
+      val again = pipeline.Dedup.clusterLabelsCached(spark, d)
+        .orderBy("doc_id").collect().toSeq
+      assert(again == first)
+      assert(Tables.tempBuildCount == builds1, "warm labels store rebuilt")
+    } finally {
+      spark.conf.unset("spark.graft.store.root")
+      Tables.storeCountCap = oldCap
+      Tables.storeEvictionGraceMs = oldGrace
+      pipeline.Dedup.evictSharedStores()
+      Tables.sweepCondemnedStores(force = true)
+      scala.reflect.io.Path(root.toFile).deleteRecursively()
+      scala.reflect.io.Path(storeRoot.toFile).deleteRecursively()
+    }
+  }
+
+  test("two concurrent first calls on one store run one build and read " +
+      "the same directory") {
+    val root = java.nio.file.Files.createTempDirectory("graft-race-spec")
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(2)
+    try {
+      val path = s"${writeCorpus(root, 8)}/documents.parquet"
+      val calls = new java.util.concurrent.atomic.AtomicInteger(0)
+      val go = new java.util.concurrent.CountDownLatch(1)
+      val builds0 = Tables.tempBuildCount
+      val serve: java.util.concurrent.Callable[Set[String]] = () => {
+        go.await()
+        Tables.contentKeyedTempParquet(spark, path, "graft-race-spec") {
+          calls.incrementAndGet()
+          Thread.sleep(500) // hold the build open while the other caller arrives
+          spark.range(0, 10).toDF("id")
+        }.inputFiles.toSet
+      }
+      val a = pool.submit(serve)
+      val b = pool.submit(serve)
+      go.countDown()
+      val (filesA, filesB) = (a.get(), b.get())
+      assert(calls.get() == 1, s"${calls.get()} builds for one store key")
+      assert(Tables.tempBuildCount - builds0 == 1)
+      assert(filesA.nonEmpty && filesA == filesB,
+        "both callers must read the one built directory")
+    } finally {
+      pool.shutdown()
+      Tables.evictStores(_ == "graft-race-spec")
+      Tables.sweepCondemnedStores(force = true)
+      scala.reflect.io.Path(root.toFile).deleteRecursively()
+      ()
+    }
+  }
+
   test("spark.graft.store.root redirects store files to a shared-FS root") {
     // On a multi-host cluster the stores must live on a SHARED filesystem
     // (executors read what the driver registers). With the conf set, new
@@ -155,9 +253,8 @@ class StoreBudgetSpec extends SparkSpec {
       val rows = pipeline.Dedup.materializedPairs(spark, d, 0.5)
         .orderBy("a_id", "b_id").collect().toSeq
       assert(rows.nonEmpty)
-      var dir: String = null
-      Tables.storeRegistry.forEach((dd, e) =>
-        if (e.store == "graft-pairs-idx" && e.key.startsWith(d)) dir = dd)
+      val dir = Tables.storeEntries.find(e => e.store == "graft-pairs-idx" &&
+        e.key.startsWith(d)).map(_.dir).orNull
       assert(dir != null && dir.startsWith(root.toString),
         s"store dir $dir must land under the configured root $root")
       assert(new java.io.File(dir).exists())
