@@ -492,8 +492,10 @@ object Tables {
   private[graft] def bucketedCatalogStore(s: SparkSession, store: String,
       path: String, token: String, bucketCol: String)
       (rows: => DataFrame): DataFrame = {
-    val table = s"${store}_" + java.security.MessageDigest.getInstance("MD5")
-      .digest(path.getBytes("UTF-8")).map("%02x".format(_)).mkString.take(12)
+    // `store` prefixes the table's dir; table names take '_' for '-'.
+    val table = store.replace('-', '_') + "_" + java.security.MessageDigest
+      .getInstance("MD5").digest(path.getBytes("UTF-8"))
+      .map("%02x".format(_)).mkString.take(12)
     buildOnce(catalogStores, (store, path))(c =>
         c.token == token && s.catalog.tableExists(c.table)) { prev =>
       val dir = prev.fold(newStoreDir(store))(_.dir)

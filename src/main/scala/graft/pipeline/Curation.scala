@@ -228,7 +228,7 @@ object Curation {
   private def bucketedFpStore(s: SparkSession, d: String,
       fp: DataFrame): DataFrame = {
     val path = s"$d/documents.parquet"
-    Tables.bucketedCatalogStore(s, "graft_fp_store", path,
+    Tables.bucketedCatalogStore(s, "graft-fp-store", path,
       Tables.contentToken(path), "store_fp") {
       fp.filter(col("doc_id") % 2 === 0).select(col("fp")).distinct()
         .withColumnRenamed("fp", "store_fp")

@@ -366,7 +366,7 @@ object Similarity {
   private def bucketedBandStore(s: SparkSession, d: String, even: DataFrame,
       nTables: Int, nBits: Int): DataFrame = {
     val path = s"$d/embeddings.parquet"
-    Tables.bucketedCatalogStore(s, "graft_ann_store", path,
+    Tables.bucketedCatalogStore(s, "graft-ann-store", path,
       Tables.contentToken(path) + s"#$nTables#$nBits", "bsig")(
       bandRows(even, nTables, nBits, "store_vec_id", "store_v"))
   }
